@@ -3,6 +3,7 @@ stream then querying == building fresh from the final corpus state."""
 
 from __future__ import annotations
 
+import json
 import math
 
 import pytest
@@ -182,3 +183,60 @@ def test_streaming_foreachbatch(spark, base_docs, tmp_path):
     build_index(spark, final, fresh_dir, config=CFG)
     for terms in QUERIES[:2]:
         _assert_same(_topk(spark, inc_dir, terms), _topk(spark, fresh_dir, terms))
+
+
+def _tiny_index(spark, path):
+    docs = [(i, f"alpha beta w{i % 7} w{i % 3}") for i in range(60)]
+    build_index(
+        spark, spark.createDataFrame(docs, "doc_id long, text string"),
+        path, config=CFG,
+    )
+    return IncrementalIndex(spark, path, CFG)
+
+
+def test_batch_and_compact_destroy_their_broadcasts(spark, tmp_path, monkeypatch):
+    """Every broadcast handle a mixed apply_batch (DF-correction id sets)
+    and a compact (liveness arrays) create is destroyed once the commit
+    is done — a long-running ingest process must not accrete them."""
+    from pyspark import SparkContext
+
+    inc = _tiny_index(spark, str(tmp_path / "bc"))
+    made = []
+    orig = SparkContext.broadcast
+
+    def spy(self, value):
+        h = orig(self, value)
+        made.append(h)
+        return h
+
+    monkeypatch.setattr(SparkContext, "broadcast", spy)
+    inc.apply_batch(
+        adds=spark.createDataFrame(
+            [(3, "alpha rewritten"), (500, "gamma new")], "doc_id long, text string"
+        ),
+        delete_ids=[5, 7],
+    )
+    n_batch = len(made)
+    inc.compact()
+    assert n_batch >= 2 and len(made) > n_batch, (n_batch, len(made))
+    assert [h._jbroadcast.isValid() for h in made] == [False] * len(made)
+
+
+def test_apply_batch_refreshes_term_bytes(spark, tmp_path):
+    """apply_batch recounts meta['term_bytes'] (the _can_pin_dict gate
+    reads it) with n_terms: after a batch adding new terms it equals
+    sum(length(term)) of the committed term_dict."""
+    d = str(tmp_path / "tb")
+    inc = _tiny_index(spark, d)
+    before = json.load(open(f"{d}/meta.json"))["term_bytes"]
+    meta = inc.apply_batch(
+        adds=spark.createDataFrame(
+            [(100, "brandnewterm anotherlongnewterm alpha")],
+            "doc_id long, text string",
+        )
+    )
+    want = PackedIndex(spark, d, CFG).term_dict.agg(
+        F.sum(F.length("term"))
+    ).first()[0]
+    assert meta["term_bytes"] == want > before
+    assert json.load(open(f"{d}/meta.json"))["term_bytes"] == want

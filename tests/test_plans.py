@@ -72,17 +72,16 @@ def test_rescore_doc_ranges_reach_doc_dict_scan(packed):
     disk, or as an InMemoryTableScan predicate (cache-batch stats
     pruning) when it is cached, and the decoded-postings side must pick
     the same filter up so non-candidate rows die before the join."""
-    import numpy as np
+    import pandas as pd
 
     qinfo = packed._query_info(["spark", "join"])
-    df = packed._score_flagged_arrays(
-        np.array([qinfo[0]["term_id"]], dtype=np.int64),
-        np.array([0], dtype=np.int32),
-        np.array([0], dtype=np.int32),
-        np.array([0], dtype=np.int32),
-        np.array([True]),
-        qinfo, 1.2, 0.75,
-        doc_ranges=[(0, 100), (200, 300)],
+    tid = qinfo[0]["term_id"]
+    kdf = packed._kdf(pd.DataFrame(
+        {"term_id": [tid], "salt": [0], "block_seq": [0], "gen": [0],
+         "is_target": [True]}
+    ))
+    df = packed._score_flagged_df(
+        kdf, [tid], qinfo, 1.2, 0.75, doc_ranges=[(0, 100), (200, 300)],
     )
     plan = explain_str(df)
     range_lines = [

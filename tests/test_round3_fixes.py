@@ -235,9 +235,10 @@ def test_recover_dir_leaves_new_alone(tmp_path):
 
 
 def test_distributed_wand_metadata_cache_is_bounded(spark, built):
-    """The distributed variant keeps its cached metadata relation in a
-    bounded per-index LRU (round 4: repeated serving queries skip the
-    re-materialization); distinct queries must evict, not accrete."""
+    """The distributed metadata source keeps its cached relation in the
+    bounded per-index WAND source LRU (repeated serving queries skip the
+    re-materialization); distinct queries must evict and unpersist, not
+    accrete."""
     idx = PackedIndex(spark, built, CFG)
     want = _rows(idx.bm25_topk(["spark", "join"], k=10, mode="exact"))
     jsc = spark.sparkContext._jsc.sc()
@@ -247,12 +248,12 @@ def test_distributed_wand_metadata_cache_is_bounded(spark, built):
     assert got == want
     for terms in (["spark"], ["join"], ["query"], ["the"], ["spark", "the"]):
         idx.bm25_topk(terms, k=5, mode="wand").collect()
-    assert len(idx._dist_meta_cache) <= 4
+    assert len(idx._wand_cache) <= 4
     assert jsc.getPersistentRDDs().size() <= before + 4
     # repeat query hits the cache (same entry, no growth)
-    n = len(idx._dist_meta_cache)
+    n = len(idx._wand_cache)
     idx.bm25_topk(["spark", "join"], k=10, mode="wand").collect()
-    assert len(idx._dist_meta_cache) == n
+    assert len(idx._wand_cache) == n
 
 
 def test_reference_preset_and_budget(spark, built):

@@ -159,12 +159,12 @@ def test_seg_survivors_superset_of_true_overlap_prune(spark, tmp_path):
                 lo = int(rng.randint(0, max(1, span - 1)))
                 hi = lo + int(rng.randint(0, span // 2))
                 ub = float(rng.rand() * 3)
-                rows.append((t, 0, s, rng.randint(0, 2), lo, hi, ub, 0.0))
+                rows.append((t, 0, s, rng.randint(0, 2), 1, lo, hi, ub, 0.0))
         import pandas as pd
 
         pdf = pd.DataFrame(
             rows,
-            columns=key_cols + ["min_doc", "max_doc", "ub", "sp_credit"],
+            columns=key_cols + ["n", "min_doc", "max_doc", "ub", "sp_credit"],
         )
         meta2 = spark.createDataFrame(pdf)
         theta = float(np.percentile(pdf["ub"], 60) * 1.5)

@@ -7,7 +7,6 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from tf_idf_vectorizer_spark.config import EngineConfig
 from tf_idf_vectorizer_spark.operators.index_build import build_index
@@ -92,32 +91,66 @@ def test_wand_equals_oracle_zipf(zipf_idx, terms):
 
 
 def test_wand_prunes_blocks(spark, zipf_idx):
-    """The prune pass must actually skip blocks on a rare+head query
-    (otherwise it's just the exact path with extra steps)."""
+    """The shipping planner must actually skip blocks, from BOTH metadata
+    sources (otherwise it's just the exact path with extra steps): the
+    one rescore gate receives fewer target blocks than the query's terms
+    hold, and the answer stays exact.  The rare+head query runs on the
+    driver source only: the distributed source's segment grid credits a
+    sparse term's global max to every cell, so at this toy scale its
+    no-prune estimate (rightly) takes the exact pass."""
     idx, _ = zipf_idx
-    qinfo = idx._query_info(["t1", "t790"])
-    tids = [r["term_id"] for r in qinfo]
-    total_blocks = idx._blocks_for(tids).count()
-    # replicate pass 1+2 to count survivors
-    import numpy as np
+    k = 10
+    for source, mcm, queries in (
+        ("driver", PackedIndex.META_COLLECT_MAX, (["t1"], ["t1", "t790"])),
+        ("dist", 0, (["t1"],)),
+    ):
+        for terms in queries:
+            total_blocks = idx._blocks_for(
+                [r["term_id"] for r in idx._query_info(terms)]
+            ).count()
+            probe = PackedIndex(spark, idx.dir, CFG)
+            probe.META_COLLECT_MAX = mcm
+            targets = []
+            orig = probe._rescore_topk
 
-    k1, b, k = idx.config.k1, idx.config.b, 10
-    idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
-    meta = idx._blocks_for(tids).withColumn("ub", idx._block_ub(idf_map, k1, b))
-    rare = min(qinfo, key=lambda r: (r["df"], r["term"]))
-    seed_docs = idx.decode_postings([rare["term_id"]]).select("doc_id").distinct()
-    ids = np.sort(np.array([r["doc_id"] for r in seed_docs.collect()]))
-    top = (
-        idx._score_candidates(ids, tids, qinfo, k1, b)
-        .orderBy(F.desc("score")).limit(k).collect()
-    )
-    theta = top[-1]["score"]
-    term_ubs = {r["term_id"]: r["ub"] for r in meta.groupBy("term_id").agg(F.max("ub").alias("ub")).collect()}
-    s = sum(term_ubs.values())
-    surv = 0
-    for tid in tids:
-        others = s - term_ubs[tid]
-        surv += meta.filter(
-            (F.col("term_id") == tid) & (F.col("ub") + F.lit(others) >= theta)
-        ).count()
-    assert surv < total_blocks, f"no pruning: {surv}/{total_blocks}"
+            def spy(cand, *a, _orig=orig, **kw):
+                targets.append(int(cand["is_target"].sum()))
+                return _orig(cand, *a, **kw)
+
+            probe._rescore_topk = spy
+            _cmp(
+                probe.bm25_topk(terms, k=k, mode="wand").collect(),
+                idx.bm25_topk(terms, k=k, mode="exact").collect(),
+            )
+            assert [key[0] for key in probe._wand_cache] == [source]
+            assert targets, f"{source} {terms}: escaped to the exact pass"
+            assert targets[-1] < total_blocks, (source, terms, targets, total_blocks)
+
+
+def test_wand_distributed_rescore_rank_identical(spark, zipf_idx):
+    """Past the driver rescore's volume gate (forced with
+    DRIVER_VOLUME_MAX=0) a pruned candidate set is rescored distributed,
+    with the candidate ranges pushed into the doc_dict scan and the
+    block_seq intervals into the payload scan — from both sources."""
+    idx, _ = zipf_idx
+    for mcm, terms in (
+        (PackedIndex.META_COLLECT_MAX, ["t1", "t790"]),
+        (PackedIndex.META_COLLECT_MAX, ["t2"]),
+        (0, ["t1"]),
+    ):
+        probe = PackedIndex(spark, idx.dir, CFG)
+        probe.META_COLLECT_MAX = mcm
+        probe.DRIVER_VOLUME_MAX = 0
+        calls = []
+        orig = probe._score_flagged_df
+
+        def spy(*a, _orig=orig, **kw):
+            calls.append(kw.get("block_filter") is not None)
+            return _orig(*a, **kw)
+
+        probe._score_flagged_df = spy
+        _cmp(
+            probe.bm25_topk(terms, k=10, mode="wand").collect(),
+            idx.bm25_topk(terms, k=10, mode="exact").collect(),
+        )
+        assert any(calls), f"{terms}: no distributed pruned rescore ran"

@@ -1,5 +1,6 @@
 """Randomized rank-identity sweep over corpus shapes x query shapes:
-every dispatch path (driver / exact / wand) must return the same
+every dispatch path (driver / exact / wand, with WAND planned over both
+metadata sources) must return the same
 rounded top-k on every seeded random query — the reference contract is
 one exact scorer (scoring.rs:410-435); all our physical strategies
 must be invisible in results.
@@ -78,4 +79,13 @@ def test_random_queries_rank_identical(rand_idx):
             mode: _rows(idx.bm25_topk(q, k=k, mode=mode))
             for mode in ("driver", "exact", "wand")
         }
-        assert got["driver"] == got["exact"] == got["wand"], (name, q, k)
+        # wand_dist: the same planner over the distributed metadata
+        # source (block metadata never collected to the driver)
+        idx.META_COLLECT_MAX = 0
+        try:
+            got["wand_dist"] = _rows(idx.bm25_topk(q, k=k, mode="wand"))
+        finally:
+            idx.META_COLLECT_MAX = PackedIndex.META_COLLECT_MAX
+        assert (
+            got["driver"] == got["exact"] == got["wand"] == got["wand_dist"]
+        ), (name, q, k)

@@ -24,10 +24,11 @@ Block-max WAND, three bounded passes:
      inequality of its best term's block).
   3. RESCORE — decode surviving blocks plus the pruned blocks whose
      doc-id range overlaps them (the is_target flag rides through the
-     decode kernel; overlap is interval math — driver-side when the
-     metadata fits, a salt-local interval join otherwise), exact BM25
-     via one groupBy(doc_id).sum, then TakeOrderedAndProject top-k.
-     Candidate doc ids are NEVER collected.
+     decode kernel; overlap is interval math over the block metadata —
+     numpy when it fits the driver, a range filter over the cached
+     metadata relation otherwise), exact BM25 via one
+     groupBy(doc_id).sum, then TakeOrderedAndProject top-k.  Candidate
+     doc ids are NEVER collected.
 
 Below WAND territory, auto mode dispatches to a bounded SINGLE-NODE
 serving path (the reference's own regime, scoring.rs:215-288): one
@@ -52,13 +53,26 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig
 from tf_idf_vectorizer_spark.operators.codec import decode_varint
 
 _DECODE_SCHEMA = "term_id long, doc_id long, tf long, gen int"
+_TOPK_SCHEMA = "doc_id long, score double, doc_len long"
+_KDF_SCHEMA = "term_id long, salt int, block_seq int, gen int, is_target boolean"
+# gen is part of the physical block identity: pack_blocks_jvm restarts
+# block_seq per generation, so after apply_batch the same (term_id,
+# salt, block_seq) exists once PER GEN — keys without gen would join one
+# metadata row onto several blocks and double-count their scores
+_KEY_COLS = ["term_id", "salt", "block_seq", "gen"]
+# doc-id ranges pushed down as one OR predicate; past this many, their
+# envelope (a looser but still sound filter)
+_RANGE_PRED_MAX = 256
+# WAND metadata-source LRU entries per index; a distributed entry pins
+# one cached relation in executor memory until evicted
+_WAND_CACHE_MAX = 4
 
 
 def _arrow_df(spark: SparkSession, data, schema: str) -> DataFrame:
@@ -73,17 +87,6 @@ def _arrow_df(spark: SparkSession, data, schema: str) -> DataFrame:
         names = [c.strip().split()[0] for c in schema.split(",")]
         data = pd.DataFrame(list(data), columns=names)
     return spark.createDataFrame(data, schema)
-
-
-def _merge_intervals(ivs: list) -> list:
-    """Sorted disjoint merge of (lo, hi) inclusive intervals."""
-    out: list = []
-    for lo, hi in sorted(ivs):
-        if out and lo <= out[-1][1] + 1:
-            out[-1] = (out[-1][0], max(out[-1][1], hi))
-        else:
-            out.append((lo, hi))
-    return out
 
 
 def _range_max(vals: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
@@ -142,6 +145,40 @@ def _overlap_credit(
     lo_idx = np.searchsorted(e2m, qlo, side="left")
     hi_idx = np.searchsorted(s2, qhi, side="right")
     return _range_max(u2, lo_idx, hi_idx)
+
+
+def _ranges_pred(lo_col: str, hi_col: str, ranges) -> Column:
+    """One predicate: the row's [lo_col, hi_col] intersects any of the
+    inclusive ``ranges`` (lo_col == hi_col tests point membership).
+    Built as ONE SQL expression string — a single py4j call however
+    many ranges, where a Column-op chain costs several per range."""
+    return F.expr(" OR ".join(
+        f"({lo_col} <= {int(hi)} AND {hi_col} >= {int(lo)})" for lo, hi in ranges
+    ))
+
+
+def _collapse_ranges(lo: np.ndarray, hi: np.ndarray) -> list[tuple]:
+    """Merged sorted ranges as a pushdown list; past _RANGE_PRED_MAX
+    ranges, their single envelope."""
+    if lo.size > _RANGE_PRED_MAX:
+        return [(int(lo[0]), int(hi[-1]))]
+    return list(zip(lo.tolist(), hi.tolist()))
+
+
+def _candidate_ranges(dense: pd.DataFrame, sp: pd.DataFrame | None, surv: pd.DataFrame):
+    """The WAND rescore's merged candidate doc-id ranges: each DENSE
+    survivor's [min_doc, max_doc] span, plus the decoded live docs of
+    surviving SPARSE blocks (``sp`` postings whose block key is in
+    ``surv``) as singleton ranges — a sparse block's span covers nearly
+    the whole corpus and would drag every other block back into the
+    rescore.  -> (lo, hi) arrays, possibly empty."""
+    lo = [dense["min_doc"].to_numpy(np.int64)]
+    hi = [dense["max_doc"].to_numpy(np.int64)]
+    if sp is not None and len(surv):
+        d = sp.merge(surv[_KEY_COLS], on=_KEY_COLS)["doc_id"].to_numpy(np.int64)
+        lo.append(d)
+        hi.append(d)
+    return _merge_ranges(np.concatenate(lo), np.concatenate(hi))
 
 
 def _bm25_partial(ln_idf, tf, dl, k1: float, b: float, avg_len: float):
@@ -1174,11 +1211,8 @@ class PackedIndex:
         return self._topk_rows(uids, sums, udl, k)
 
     def _bm25_driver(self, qinfo: list[dict], k: int, k1: float, b: float) -> DataFrame:
-        return _arrow_df(
-            self.spark,
-            self._bm25_driver_rows(qinfo, k, k1, b),
-            "doc_id long, score double, doc_len long",
-        )
+        rows = self._bm25_driver_rows(qinfo, k, k1, b)
+        return _arrow_df(self.spark, rows, _TOPK_SCHEMA)
 
     def bm25_topk_rows(
         self,
@@ -1249,24 +1283,23 @@ class PackedIndex:
         semantics, scoring.rs:179-188).
 
         mode='auto' dispatches on Σ df(t) (already known from the
-        dictionary lookup — no extra job): small posting volume -> exact
-        single pass; large -> block-max WAND.  Both are rank-identical.
+        dictionary lookup — no extra job, see :meth:`_dispatch`): at or
+        above WAND_THRESHOLD -> block-max WAND; below it, the single-node
+        'driver' path when the doc stats are pinned and the volume is
+        driver-sized, else the distributed 'exact' single pass.  All
+        three are rank-identical.
         """
         k1 = self.config.k1 if k1 is None else k1
         b = self.config.b if b is None else b
         qinfo = self._query_info(terms)
         if not qinfo or self.doc_num == 0:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
-        tids = [r["term_id"] for r in qinfo]
+            return _arrow_df(self.spark, [], _TOPK_SCHEMA)
         if mode == "auto":
             mode = self._dispatch(qinfo)
         if mode == "driver":
             return self._bm25_driver(qinfo, k, k1, b)
         if mode == "exact":
-            scored = self._score_decoded(self.decode_postings(tids), qinfo, k1, b)
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            return self._exact_topk(qinfo, k, k1, b)
         if mode != "wand":
             raise ValueError(f"mode must be auto|exact|wand|driver, got {mode!r}")
         return self._wand_topk(qinfo, k, k1, b)
@@ -1291,9 +1324,7 @@ class PackedIndex:
             return self.bm25_topk(list(terms.keys()), k=k, k1=k1, b=b)
         qinfo = self._query_info(list(terms.keys()))
         if not qinfo or self.doc_num == 0:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
+            return _arrow_df(self.spark, [], _TOPK_SCHEMA)
         tids = [r["term_id"] for r in qinfo]
         decoded = self.decode_postings(tids)
         keys = ["doc_id"] + (["gen"] if "gen" in self.doc_dict.columns else [])
@@ -1690,17 +1721,13 @@ class PackedIndex:
         qinfo = self._query_info(terms)
         cand = self._eval_ast(query)
         if self.doc_num == 0:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
+            return _arrow_df(self.spark, [], _TOPK_SCHEMA)
         if qinfo:
             scored = self._score_decoded(
                 self.decode_postings([r["term_id"] for r in qinfo]), qinfo, k1, b
             )
         else:
-            scored = _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
+            scored = _arrow_df(self.spark, [], _TOPK_SCHEMA)
         hits = (
             cand.join(scored.select("doc_id", "score"), "doc_id", "left")
             .fillna({"score": 0.0})
@@ -1777,343 +1804,282 @@ class PackedIndex:
             ub = F.least(ub, F.col("max_score"))
         return ub
 
-    # above this many block-metadata rows for the query's terms, keep the
-    # fully distributed WAND (driver can't hold the metadata); below it,
-    # planning happens driver-side and the whole query is 2 Spark jobs
+    # above this many block-metadata rows for the query's terms, WAND
+    # plans over the distributed metadata source (driver can't hold the
+    # metadata); below it, over the driver source (see _wand_source)
     META_COLLECT_MAX = 200_000
     # ride the rare term's tf payload with the metadata collect (for the
     # job-free driver θ) only while it stays driver-sized (~2 bytes/row)
     DRIVER_THETA_MAX_DF = 200_000
-    # distributed WAND: survivor sets up to this size collect precisely
+    # distributed source: survivor sets up to this size collect precisely
     # (exact candidate ranges + block_seq pushdown); above it, per-salt
     # envelopes + sparse singletons (class attr so tests can force the
     # envelope branch at toy scale)
     DIST_SURV_COLLECT_MAX = 100_000
 
+    def _exact_topk(self, qinfo: list[dict], k: int, k1: float, b: float) -> DataFrame:
+        """The plain exact single pass — mode='exact', and every WAND
+        escape: by the pruning proof it selects the same top-k as any
+        sound prune, so WAND falls back to it whenever pruning cannot
+        pay (no θ, nothing pruned, no candidate range)."""
+        scored = self._score_decoded(
+            self.decode_postings([r["term_id"] for r in qinfo]), qinfo, k1, b
+        )
+        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    def _wand_source(
+        self, qinfo: list[dict], idf_map: dict[int, float], k1: float, b: float,
+        tight: bool,
+    ):
+        """The query's block-metadata source, through ONE bounded LRU of
+        source entries (block metadata is immutable per generation, so
+        repeated vocabularies plan job-free; the sparse payload rides
+        in the same entry).  Driver source when the metadata fits
+        META_COLLECT_MAX, the cached distributed relation otherwise.
+
+        The choice costs no job while the dictionary can bound it: at
+        generation 0 every posting row is live, so each term holds
+        ceil(df/block_size) full blocks plus at most one partial block
+        per salt — past META_COLLECT_MAX even for that bound, plan
+        distributed without touching the metadata; below it, fetch
+        WITHOUT a .limit() guard (the guard forces a single-partition
+        exchange — measured 2x the whole fetch cost).  After
+        incremental batches stale generations keep rows df can't see,
+        so gen > 0 fetches guarded and goes distributed on overflow."""
+        tids = sorted(idf_map)
+        sparse_ids = self._sparse_query_terms(qinfo)
+        gen = int(self.meta.get("generation", 0))
+        key = (tuple(sorted(idf_map.items())), tuple(sparse_ids), tight,
+               float(k1), float(b), gen)
+        cache = self.__dict__.setdefault("_wand_cache", {})
+
+        def cached(kind: str):
+            ent = cache.pop((kind,) + key, None)
+            if ent is not None:
+                cache[(kind,) + key] = ent  # LRU touch (move to end)
+            return ent
+
+        def put(kind: str, ent):
+            # evicted distributed entries unpersist, so the bound holds
+            # in executor memory, not just in entry count
+            while len(cache) >= _WAND_CACHE_MAX:
+                cache.pop(next(iter(cache))).release()
+            cache[(kind,) + key] = ent
+            return ent
+
+        def meta_df() -> DataFrame:
+            # metadata columns only: parquet column pruning never reads
+            # the compressed payloads
+            cols = _KEY_COLS + ["n", "min_doc", "max_doc", "max_tf", "min_dl"]
+            return self._blocks_for(tids).select(
+                *cols, *(["max_score"] if tight else [])
+            ).withColumn("ub", self._block_ub(idf_map, k1, b, tight))
+
+        n_salts = int(self.meta.get("n_salts", 1) or 1)
+        est_blocks = sum(
+            -(-int(r["df"]) // self.config.block_size) for r in qinfo
+        ) + n_salts * len(qinfo)
+        if gen != 0 or est_blocks <= self.META_COLLECT_MAX:
+            ent = cached("driver")
+            if ent is None:
+                # Arrow fetch: a head query's metadata is 10^4-10^5 rows,
+                # and a py4j row collect of that costs 1-2 s — more than
+                # the pruning could ever save
+                mp = self._topandas_arrow(
+                    meta_df() if gen == 0
+                    else meta_df().limit(self.META_COLLECT_MAX + 1)
+                )
+                if len(mp) <= self.META_COLLECT_MAX:
+                    ent = put("driver", _DriverSource(
+                        self, mp, self._sparse_postings_np(sparse_ids, idf_map, k1, b),
+                        sparse_ids,
+                    ))
+            if ent is not None and ent.n_blocks() <= self.META_COLLECT_MAX:
+                return ent
+        ent = cached("dist")
+        if ent is None:
+            ent = put("dist", _DistSource(
+                self, tids, meta_df().cache(),
+                self._sparse_postings_np(sparse_ids, idf_map, k1, b), sparse_ids,
+            ))
+        return ent
+
     def _wand_topk(self, qinfo: list[dict], k: int, k1: float, b: float) -> DataFrame:
-        """Block-max WAND with driver-side planning when the query's
-        block METADATA fits on the driver (a few hundred KB for typical
-        queries): collect metadata once, pick seed blocks + compute the
-        prune driver-side, then run exactly TWO jobs — a fused
-        theta pass and a fused candidate+rescore pass.  Each pass
-        decodes one driver-chosen block set with an `is_target` flag
+        """Block-max WAND, ONE planner over two block-metadata sources
+        (:meth:`_wand_source`): sparse fetch -> θ -> prune -> candidate
+        ranges -> candidate blocks -> rescore.  The sources differ only
+        in where the metadata lives and how the prune reads it:
+
+          * driver — an Arrow-fetched pandas frame; exact doc-range-
+            aligned credits (_overlap_credit / _range_max);
+          * distributed — a cached DataFrame for head-term territory;
+            the segment-grid credits (_seg_summary / _seg_survivors_from,
+            a binned max-score bound), with θ from metadata computed in
+            a background thread while the grid summary job runs.
+
+        Each decode pass reads one block set with an is_target flag
         propagated through the decode kernel, so candidate membership
-        needs no extra collect.  Falls back to the distributed variant
-        when metadata is too large (true head-term territory)."""
+        needs no extra collect.  SPARSE terms (df driver-sized, see
+        _sparse_query_terms) are decoded on the driver; they give what
+        no block metadata can — θ floors (each posting scored with its
+        block's max_dl is a real doc's score LOWER bound), per-POSTING
+        credit (a sparse term's blocks span huge doc ranges and would
+        credit every other block), and singleton candidate ranges."""
         tids = [r["term_id"] for r in qinfo]
         idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
-        rare = min(qinfo, key=lambda r: (r["df"], r["term"]))
         tight = self._tight_bounds_ok(k1, b)
         nonneg = min(float(r["idf"]) for r in qinfo) > 1.0
-        gen0 = int(self.meta.get("generation", 0)) == 0
-        # SPARSE terms: when a query term's whole posting payload is
-        # driver-sized (df <= DRIVER_THETA_MAX_DF, a few hundred KB of
-        # varints) and every posting row is live (gen 0), fetch its
-        # doc_deltas + tfs in a second, term-pruned scan (cached with
-        # the metadata).  Decoded driver-side they give three things no
-        # block metadata can:
-        #   θ floors  — each posting scored with its block's max_dl is a
-        #               real doc's score LOWER bound (k-th largest = θ);
-        #   per-POSTING upper bounds — a sparse term's blocks cover few
-        #               docs spread over huge doc-id ranges, so its
-        #               block-range bound credits it to EVERY other
-        #               block; the decoded ids credit it only to blocks
-        #               that truly contain one of its docs (this is what
-        #               lets head+rare queries prune at all);
-        #   exact candidate intervals — a surviving sparse block enters
-        #               the rescore as its docs' singleton ranges, not
-        #               its (enormous) [min_doc, max_doc] span.
-        sparse_ids = self._sparse_query_terms(qinfo)
-        # gen is part of the physical block identity: pack_blocks_jvm
-        # restarts block_seq per generation, so after apply_batch the
-        # same (term_id, salt, block_seq) exists once PER GEN — keys
-        # without gen would join one metadata row onto several blocks
-        # and double-count their scores
-        meta_cols = ["term_id", "salt", "block_seq", "gen", "n", "min_doc",
-                     "max_doc", "max_tf", "min_dl"]
-        if tight:
-            meta_cols.append("max_score")
-        sel = [F.col(c) for c in meta_cols]
-        # Arrow fetch: a head query's metadata is 10^4-10^5 rows, and a
-        # py4j row collect of that costs 1-2 s — more than the pruning
-        # could ever save.  Everything below is vectorized numpy.
-        # Block metadata is IMMUTABLE per generation, so a small LRU
-        # makes repeated-term planning job-free in a serving session
-        # (bounded: ~15 MB/entry worst case x 8 entries).
-        ck = (tuple(sorted(tids)), tuple(sorted(sparse_ids)), tight,
-              float(k1), float(b), int(self.meta.get("generation", 0)))
-        cache = getattr(self, "_wand_meta_cache", None)
-        if cache is None:
-            cache = self._wand_meta_cache = {}
-        # block-count bound from the dictionary (no job): at gen 0 every
-        # posting row is live, so each term holds ceil(df/block_size)
-        # full blocks plus at most one partial block per salt — if even
-        # the bound exceeds the driver budget, plan distributed without
-        # touching the metadata, and otherwise fetch WITHOUT a .limit()
-        # guard (the guard forces a single-partition exchange — measured
-        # 2x the whole fetch cost).  After incremental batches stale
-        # generations keep rows df can't see, so gen>0 falls back to the
-        # guarded fetch.
-        n_salts = int(self.meta.get("n_salts", 1) or 1)
-        if gen0:
-            est_blocks = sum(
-                -(-int(r["df"]) // self.config.block_size) for r in qinfo
-            ) + n_salts * len(qinfo)
-            if est_blocks > self.META_COLLECT_MAX:
-                return self._wand_topk_distributed(qinfo, k, k1, b)
-        hit = cache.get(ck)
-        if hit is None:
-            meta_df = (
-                self._blocks_for(tids).select(*sel)
-                .withColumn("ub", self._block_ub(idf_map, k1, b, tight))
-            )
-            if not gen0:
-                meta_df = meta_df.limit(self.META_COLLECT_MAX + 1)
-            mp = self._topandas_arrow(meta_df)
-            # sparse payloads come from a SECOND, term-pruned scan: the
-            # metadata scan must not project tfs/doc_deltas, or parquet
-            # reads the HEAD terms' full payload chunks just to null
-            # them out — the cost the metadata-only fetch exists to skip
-            spf = None
-            if sparse_ids and len(mp) <= self.META_COLLECT_MAX:
-                spf = self._topandas_arrow(
-                    self._blocks_for(sparse_ids).select(
-                        "term_id", "salt", "block_seq", "gen", "n",
-                        "min_dl", "max_dl", "doc_deltas", "tfs",
-                    )
-                )
-            if len(mp) <= self.META_COLLECT_MAX:
-                while len(cache) >= 8:
-                    cache.pop(next(iter(cache)))
-                cache[ck] = (mp, spf)
-        else:
-            mp, spf = hit
-        if len(mp) > self.META_COLLECT_MAX:
-            return self._wand_topk_distributed(qinfo, k, k1, b)
-        n_blocks = len(mp)
-        if n_blocks == 0:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
-        bterm = mp["term_id"].to_numpy(np.int64)
-        bsalt = mp["salt"].to_numpy(np.int32)
-        bseq = mp["block_seq"].to_numpy(np.int32)
-        bgen = mp["gen"].to_numpy(np.int32)
-        blo = mp["min_doc"].to_numpy(np.int64)
-        bhi = mp["max_doc"].to_numpy(np.int64)
-        bub = mp["ub"].to_numpy(np.float64)
-
-        # ---- decode sparse terms' postings (driver, vectorized) --------
-        # sp[tid] = (sorted doc_ids, per-posting ub, per-posting floor,
-        #            row index of each posting's block in mp)
-        sp: dict[int, tuple] = {}
-        if spf is not None and len(spf):
-            kcols = ["term_id", "salt", "block_seq", "gen"]
-            pos = mp[kcols].copy()
-            pos["_mp_row"] = np.arange(n_blocks, dtype=np.int64)
-            spm = spf.merge(pos, on=kcols, how="inner")
-            spt = spm["term_id"].to_numpy(np.int64)
-            for tid in sparse_ids:
-                rr = np.flatnonzero(spt == tid)
-                if rr.size == 0:
-                    continue
-                nn = spm["n"].to_numpy(np.int64)[rr]
-                deltas = decode_varint(
-                    b"".join(bytes(spm["doc_deltas"].iloc[i]) for i in rr)
-                ).astype(np.int64)
-                tf = decode_varint(
-                    b"".join(bytes(spm["tfs"].iloc[i]) for i in rr)
-                ).astype(np.float64)
-                starts = np.concatenate(([0], np.cumsum(nn)[:-1]))
-                total = np.cumsum(deltas)
-                corr = np.zeros(rr.size, dtype=np.int64)
-                corr[1:] = total[starts[1:] - 1]
-                ids = total - np.repeat(corr, nn)
-                ln_idf = math.log(idf_map[tid])
-                min_dl = np.repeat(spm["min_dl"].to_numpy(np.float64)[rr], nn)
-                max_dl = np.repeat(spm["max_dl"].to_numpy(np.float64)[rr], nn)
-                brow = np.repeat(spm["_mp_row"].to_numpy(np.int64)[rr], nn)
-                live = self._sparse_live_mask(
-                    ids, np.repeat(spm["gen"].to_numpy(np.int64)[rr], nn)
-                )
-                if live is not None:
-                    ids, tf = ids[live], tf[live]
-                    min_dl, max_dl, brow = (
-                        min_dl[live], max_dl[live], brow[live]
-                    )
-                if ln_idf > 0:
-                    ub_p = ln_idf * (k1 + 1.0) * tf / (
-                        tf + k1 * (1.0 - b + b * min_dl / self.avg_len)
-                    )
-                    fl_p = ln_idf * (k1 + 1.0) * tf / (
-                        tf + k1 * (1.0 - b + b * max_dl / self.avg_len)
-                    )
-                else:
-                    ub_p = np.zeros(ids.size)
-                    fl_p = np.full(ids.size, -np.inf)
-                o = np.argsort(ids, kind="stable")
-                sp[tid] = (ids[o], ub_p[o], fl_p[o], brow[o])
+        src = self._wand_source(qinfo, idf_map, k1, b, tight)
+        sp = src.sp
 
         theta = -math.inf
-        # θ from sparse floors: each sparse posting's floor is a REAL
-        # doc's score lower bound (doc_len <= its block's max_dl; other
-        # terms only add when nonneg), so the k-th largest per term is a
-        # valid θ — job-free.
-        if nonneg:
-            for _ids, _ub, fl, _br in sp.values():
+        if nonneg and sp is not None:
+            # θ from sparse floors: doc_len <= its block's max_dl and the
+            # other terms only add when every ln(idf) > 0, so the k-th
+            # largest floor of one term is a valid θ — job-free
+            for _t, fl in sp.groupby("term_id", sort=False)["floor"]:
+                fl = fl.to_numpy(np.float64)
                 if fl.size >= k and math.isfinite(fl[0]):
-                    kth_fl = float(np.partition(fl, fl.size - k)[fl.size - k])
-                    theta = max(theta, kth_fl)
-        if tight and nonneg:
-            # θ FROM METADATA ALONE, no job, any term size: a block's
-            # max_score is ACHIEVED by one of its docs (true per-doc
-            # max, index_build.py), blocks of one term hold disjoint
-            # docs, and with every ln(idf) > 0 the other terms only add
-            # — so the k-th largest max_score among a single term's
-            # blocks is the k-th member of a set of k REAL docs' score
-            # floors: a valid θ.  Take the best term.
-            ms = mp["max_score"].to_numpy(np.float64)
-            o = np.lexsort((-ms, bterm))
-            ts = bterm[o]
-            first = np.concatenate(([True], ts[1:] != ts[:-1]))
-            starts = np.flatnonzero(first)
-            sizes = np.diff(np.append(starts, n_blocks))
-            rank = np.arange(n_blocks) - np.repeat(starts, sizes)
-            kth = ms[o][rank == k - 1]  # per term with >= k blocks
-            if kth.size:
-                theta = max(theta, float(kth.max()))
-        # ---- job 1 (fallback): fused theta pass -------------------------
-        rare_idx = np.flatnonzero(bterm == rare["term_id"])
-        if not math.isfinite(theta) and rare_idx.size:
-            n_seed = max(4, (4 * k) // self.config.block_size + 1)
-            seeds = rare_idx[np.argsort(-bub[rare_idx], kind="stable")[:n_seed]]
-            m_lo, m_hi = _merge_ranges(blo[seeds], bhi[seeds])
-            part = _overlap_mask(m_lo, m_hi, blo, bhi)
-            flags = np.zeros(n_blocks, dtype=bool)
-            flags[seeds] = True
-            top = (
-                self._score_flagged_arrays(
-                    bterm[part], bsalt[part], bseq[part], bgen[part],
-                    flags[part], qinfo, k1, b,
-                )
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
-            )
-            if len(top) >= k:
-                theta = top[-1]["score"]
+                    kth_fl = np.partition(fl, fl.size - k)[fl.size - k]
+                    theta = max(theta, float(kth_fl))
+        # θ FROM METADATA ALONE, any term size: a block's max_score is
+        # ACHIEVED by one of its docs (true per-doc max, index_build.py),
+        # blocks of one term hold disjoint docs, and with every
+        # ln(idf) > 0 the other terms only add — so the k-th largest
+        # max_score among one term's blocks is the k-th member of a set
+        # of k REAL docs' score floors.  Started before plan() so the
+        # distributed source overlaps it with its grid summary job.
+        kth = src.meta_theta(k) if tight and nonneg else None
+        nonempty = src.plan()
+        if kth is not None:
+            theta = max(theta, kth())
+        if not nonempty:
+            return _arrow_df(self.spark, [], _TOPK_SCHEMA)
 
-        # ---- driver-side prune: doc-range-ALIGNED bounds ----------------
-        # For a doc d in block B of term t, any other term t' can only
-        # contribute through the ONE t'-block containing d — which must
-        # overlap B's doc range (blocks of a term partition the doc-id
-        # space).  Bounding t' by the max ub of its OVERLAPPING blocks
-        # (not its global max) is what lets multi-term queries prune at
-        # all on corpora where per-term global maxima are uniform.
-        # Vectorized: per-term sorted (start, end, ub) arrays + a
-        # reduceat range-max; O(total blocks x terms) with no Python
-        # loop over blocks.
-        if math.isfinite(theta):
-            others = np.zeros(n_blocks)
-            for t2 in np.unique(bterm):
-                mask = bterm != t2
-                if int(t2) in sp:
-                    # postings-level: credit t2 only to blocks that
-                    # contain one of its ACTUAL docs (its block ranges
-                    # are sparse-wide and would credit everything)
-                    ids2, ub2, _fl, _br = sp[int(t2)]
-                    lo_idx = np.searchsorted(ids2, blo[mask], side="left")
-                    hi_idx = np.searchsorted(ids2, bhi[mask], side="right")
-                    others[mask] += _range_max(ub2, lo_idx, hi_idx)
-                    continue
-                ii = np.flatnonzero(bterm == t2)
-                srt = ii[np.argsort(blo[ii], kind="stable")]
-                # _overlap_credit stays sound for the overlapping block
-                # ranges a generation > 0 index has (running-max ends)
-                others[mask] += _overlap_credit(
-                    blo[srt], bhi[srt], bub[srt], blo[mask], bhi[mask]
-                )
-            # 1e-9 slack absorbs float-order differences between θ's and
-            # the bounds' arithmetic — only ever makes pruning LESS
-            # aggressive, never unsound
-            keep = bub + others >= theta - 1e-9
-        else:
-            keep = np.ones(n_blocks, dtype=bool)
-        n_surv = int(keep.sum())
-        if n_surv == 0:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
+        if not math.isfinite(theta):
+            # fallback θ pass: exact-score the docs of the rarest term's
+            # best-bound blocks (every block overlapping them decoded,
+            # only the seeds' docs flagged) in one fused job
+            rare = min(qinfo, key=lambda r: (r["df"], r["term"]))
+            seeds = src.seeds(
+                rare["term_id"], max(4, (4 * k) // self.config.block_size + 1)
             )
+            if len(seeds):
+                s_lo, s_hi = _merge_ranges(
+                    seeds["min_doc"].to_numpy(np.int64),
+                    seeds["max_doc"].to_numpy(np.int64),
+                )
+                top = (
+                    self._score_flagged_df(
+                        src.flagged(s_lo, s_hi, seeds), tids, qinfo, k1, b
+                    )
+                    .orderBy(F.desc("score"), F.asc("doc_id"))
+                    .limit(k)
+                    .collect()
+                )
+                if len(top) >= k:
+                    theta = top[-1]["score"]
+        if not math.isfinite(theta):
+            # no θ means no pruning: the flag machinery would decode
+            # everything anyway
+            return self._exact_topk(qinfo, k, k1, b)
 
-        # ---- job 2: fused candidate + exact rescore ---------------------
-        if n_surv >= 0.9 * n_blocks:
+        surv = src.survivors(theta)
+        if surv is None:
+            return self._exact_topk(qinfo, k, k1, b)
+        if isinstance(surv, DataFrame):
+            return src.large_topk(surv, qinfo, k, k1, b)
+        if not len(surv):
+            return _arrow_df(self.spark, [], _TOPK_SCHEMA)
+        if len(surv) >= 0.9 * src.n_blocks():
             # pruning removed (almost) nothing — on bound-adversarial
             # corpora the flag/join machinery would only add overhead
-            # over the plain exact single pass, which selects the same
-            # top-k by the pruning proof.  This caps WAND's worst case
-            # at exact + one metadata job.
-            scored = self._score_decoded(
-                self.decode_postings(tids), qinfo, k1, b
-            )
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            # over the plain exact pass.  This caps WAND's worst case at
+            # exact + the metadata jobs.
+            return self._exact_topk(qinfo, k, k1, b)
+        # candidate ranges: any top-k doc appears in >=1 surviving block,
+        # and its rows in PRUNED blocks are still needed for the exact
+        # score — every block overlapping the ranges is decoded
+        ranges = _candidate_ranges(
+            surv[~surv["term_id"].isin(src.sparse_set)], sp, surv
+        )
+        if not ranges[0].size:
+            # every survivor is a sparse block with no live docs (stale-
+            # generation artifact) — never guess at an empty result
+            return self._exact_topk(qinfo, k, k1, b)
         if len(tids) == 1:
             # one term: its blocks hold disjoint doc ranges, so a
             # surviving doc's whole posting mass for the query sits in
             # its own (surviving) block — no pruned block participates
-            # in the exact rescore
-            part = keep
+            cand = surv.assign(is_target=True)
         else:
-            # candidate intervals: surviving DENSE blocks contribute
-            # their [min_doc, max_doc] span; surviving SPARSE blocks
-            # contribute their decoded docs as singleton ranges (their
-            # block span covers nearly the whole corpus and would drag
-            # every other block back into the rescore)
-            lo_parts, hi_parts = [], []
-            sp_surv = np.zeros(n_blocks, dtype=bool)
-            for _tid, (ids_t, _u, _f, brow) in sp.items():
-                in_surv = keep[brow]
-                if in_surv.any():
-                    d = ids_t[in_surv]
-                    lo_parts.append(d)
-                    hi_parts.append(d)
-                sp_surv[np.unique(brow)] = True
-            dense_surv = keep & ~sp_surv
-            if dense_surv.any():
-                lo_parts.append(blo[dense_surv])
-                hi_parts.append(bhi[dense_surv])
-            m_lo, m_hi = _merge_ranges(
-                np.concatenate(lo_parts), np.concatenate(hi_parts)
-            )
-            part = _overlap_mask(m_lo, m_hi, blo, bhi)
-        # pruned-volume driver rescore: after pruning, the candidate
-        # decode is usually tiny, and the distributed rescore's
-        # doc_dict join would cost more than the whole query
-        part_vol = int(mp["n"].to_numpy(np.int64)[part].sum())
+            cand = src.candidates(ranges[0], ranges[1], surv)
+        return self._rescore_topk(cand, ranges, qinfo, idf_map, k1, b, k)
+
+    def _rescore_topk(
+        self,
+        cand: pd.DataFrame,
+        ranges: tuple,
+        qinfo: list[dict],
+        idf_map: dict[int, float],
+        k1: float,
+        b: float,
+        k: int,
+    ) -> DataFrame:
+        """The one rescore gate of the WAND planner.  ``cand``: candidate
+        blocks (key columns, n, is_target); ``ranges``: the merged
+        candidate doc-id ranges.  When the candidate volume is driver-
+        sized and doc stats are pinned, one payload fetch + numpy beats
+        the distributed join/agg's shuffles (after pruning the decode is
+        usually tiny); past that the flagged distributed rescore, with
+        the ranges pushed into the doc_dict scan."""
+        flags = cand["is_target"].to_numpy(bool)
         if (
-            part_vol <= min(self.DRIVER_VOLUME_MAX, self._driver_entry_budget())
+            int(cand["n"].sum())
+            <= min(self.DRIVER_VOLUME_MAX, self._driver_entry_budget())
             and self._doc_stats_np() is not None
         ):
             rows = self._rescore_driver_rows(
-                bterm[part], bsalt[part], bseq[part], bgen[part], keep[part],
-                idf_map, k1, b, k,
+                cand["term_id"].to_numpy(np.int64),
+                cand["salt"].to_numpy(np.int32),
+                cand["block_seq"].to_numpy(np.int32),
+                cand["gen"].to_numpy(np.int32),
+                flags, idf_map, k1, b, k,
             )
-            return _arrow_df(
-                self.spark, rows, "doc_id long, score double, doc_len long"
-            )
-        r_lo, r_hi = _merge_ranges(blo[part], bhi[part])
-        if r_lo.size > 64:
-            dr = [(int(r_lo[0]), int(r_hi[-1]))]
-        else:
-            dr = list(zip(r_lo.tolist(), r_hi.tolist()))
-        scored = self._score_flagged_arrays(
-            bterm[part], bsalt[part], bseq[part], bgen[part], keep[part],
-            qinfo, k1, b, doc_ranges=dr,
+            return _arrow_df(self.spark, rows, _TOPK_SCHEMA)
+        dr = _collapse_ranges(*ranges)
+        # The payload files are sorted by (term_id, block_seq), so a
+        # min_doc/max_doc predicate cannot prune row groups — but
+        # block_seq is doc-id-monotone within (term, salt, gen), so the
+        # candidate blocks translate into per-group block_seq INTERVALS
+        # whose predicate aligns with the file sort order and prunes the
+        # payload IO itself
+        grp = cand.groupby(["term_id", "salt", "gen"])["block_seq"].agg(
+            ["min", "max"]
         )
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        if len(grp) <= _RANGE_PRED_MAX:
+            blk = F.expr(" OR ".join(
+                f"(term_id = {int(t)} AND salt = {int(s)} AND gen = {int(g)}"
+                f" AND block_seq BETWEEN {int(lo)} AND {int(hi)})"
+                for (t, s, g), lo, hi in zip(grp.index, grp["min"], grp["max"])
+            ))
+        else:
+            blk = _ranges_pred("min_doc", "max_doc", dr)
+        return self._score_flagged_df(
+            self._kdf(cand), sorted(idf_map), qinfo, k1, b,
+            doc_ranges=dr, block_filter=blk,
+        ).orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
-    _KDF_SCHEMA = (
-        "term_id long, salt int, block_seq int, gen int, is_target boolean"
-    )
+    def _kdf(self, blocks: pd.DataFrame) -> DataFrame:
+        """Broadcast flag relation (block key -> is_target) from a pandas
+        frame: the keys ship via Arrow (py4j tuple shipping at 10^5 keys
+        costs ~1 s)."""
+        return F.broadcast(self.spark.createDataFrame(
+            blocks[_KEY_COLS + ["is_target"]].astype(
+                {"term_id": np.int64, "salt": np.int32, "block_seq": np.int32,
+                 "gen": np.int32, "is_target": bool}
+            )
+        ))
 
     def _rescore_driver_rows(
         self,
@@ -2199,37 +2165,6 @@ class PackedIndex:
         ci = np.flatnonzero(cand)
         return self._topk_rows(sids[ci], sums[ci], dls[ci], k)
 
-    def _score_flagged_arrays(
-        self,
-        term: np.ndarray,
-        salt: np.ndarray,
-        bseq: np.ndarray,
-        gen: np.ndarray,
-        flags: np.ndarray,
-        qinfo: list[dict],
-        k1: float,
-        b: float,
-        doc_ranges: list[tuple] | None = None,
-        block_filter=None,
-    ) -> DataFrame:
-        """Driver-planned wrapper: block-key arrays + is_target flags ->
-        broadcast kdf, built from pandas so the keys ship via Arrow
-        (py4j tuple shipping at 10^5 keys costs ~1 s)."""
-        kdf_pd = pd.DataFrame(
-            {
-                "term_id": term.astype(np.int64),
-                "salt": salt.astype(np.int32),
-                "block_seq": bseq.astype(np.int32),
-                "gen": gen.astype(np.int32),
-                "is_target": flags.astype(bool),
-            }
-        )
-        kdf = F.broadcast(self.spark.createDataFrame(kdf_pd))
-        tids = sorted(set(term.tolist()))
-        return self._score_flagged_df(
-            kdf, tids, qinfo, k1, b, doc_ranges, block_filter=block_filter
-        )
-
     def _score_flagged_df(
         self,
         kdf: DataFrame,
@@ -2257,9 +2192,7 @@ class PackedIndex:
         blocks = self._blocks_for(tids)
         if block_filter is not None:
             blocks = blocks.filter(block_filter)
-        blocks = blocks.join(
-            kdf, ["term_id", "salt", "block_seq", "gen"], kdf_how
-        )
+        blocks = blocks.join(kdf, _KEY_COLS, kdf_how)
         if kdf_how == "left":
             blocks = blocks.fillna({"is_target": False})
 
@@ -2296,11 +2229,7 @@ class PackedIndex:
         keys = ["doc_id"] + (["gen"] if "gen" in self.doc_dict.columns else [])
         dd = self.doc_dict.select(*(keys + ["doc_len"]))
         if doc_ranges:
-            cond = None
-            for lo, hi in doc_ranges:
-                c = F.col("doc_id").between(int(lo), int(hi))
-                cond = c if cond is None else (cond | c)
-            dd = dd.filter(cond)
+            dd = dd.filter(_ranges_pred("doc_id", "doc_id", doc_ranges))
         joined = decoded.join(F.broadcast(qdf), "term_id").join(dd, keys)
         tfd = F.col("tf").cast("double")
         denom = tfd + F.lit(k1) * (
@@ -2368,74 +2297,43 @@ class PackedIndex:
     def _sparse_postings_np(
         self, sparse_ids: list[int], idf_map: dict[int, float], k1: float, b: float
     ) -> pd.DataFrame | None:
-        """Fetch + decode the full (driver-sized) postings of sparse
-        query terms: one Arrow fetch of their payload blocks, one
-        vectorized varint pass.  Returns a pandas frame with one row
-        per posting: (term_id, salt, doc_id, ub, floor) — ub scores the
-        posting with its block's min_dl (upper bound), floor with
-        max_dl (a real doc's lower bound).  None when nothing found."""
+        """The ONE sparse decode: fetch the full (driver-sized) postings
+        of sparse query terms — one Arrow fetch of their payload blocks,
+        one vectorized varint pass — and liveness-filter them.  Returns
+        one row per live posting: its block key (term_id, salt,
+        block_seq, gen), doc_id, ub (scored with the block's min_dl: an
+        upper bound) and floor (with max_dl: a real doc's lower bound),
+        sorted by (term_id, doc_id).  None when nothing found."""
         if not sparse_ids:
             return None
         spf = self._topandas_arrow(
             self._blocks_for(sparse_ids).select(
-                "term_id", "salt", "n", "min_dl", "max_dl",
-                "doc_deltas", "tfs", "gen",
+                *_KEY_COLS, "n", "min_dl", "max_dl", "doc_deltas", "tfs"
             )
         )
         if not len(spf):
             return None
-        outs = []
-        stid = spf["term_id"].to_numpy(np.int64)
-        for tid in sparse_ids:
-            rr = np.flatnonzero(stid == tid)
-            if rr.size == 0:
-                continue
-            nn = spf["n"].to_numpy(np.int64)[rr]
-            deltas = decode_varint(
-                b"".join(bytes(spf["doc_deltas"].iloc[i]) for i in rr)
-            ).astype(np.int64)
-            tf = decode_varint(
-                b"".join(bytes(spf["tfs"].iloc[i]) for i in rr)
-            ).astype(np.float64)
-            starts = np.concatenate(([0], np.cumsum(nn)[:-1]))
-            total = np.cumsum(deltas)
-            corr = np.zeros(rr.size, dtype=np.int64)
-            corr[1:] = total[starts[1:] - 1]
-            ids = total - np.repeat(corr, nn)
-            ln_idf = math.log(idf_map[tid])
-            min_dl = np.repeat(spf["min_dl"].to_numpy(np.float64)[rr], nn)
-            max_dl = np.repeat(spf["max_dl"].to_numpy(np.float64)[rr], nn)
-            salts = np.repeat(spf["salt"].to_numpy(np.int32)[rr], nn)
-            live = self._sparse_live_mask(
-                ids, np.repeat(spf["gen"].to_numpy(np.int64)[rr], nn)
+        n, ids, tf = _decode_batch(spf)
+        tf = tf.astype(np.float64)
+        out = pd.DataFrame({c: np.repeat(spf[c].to_numpy(), n) for c in _KEY_COLS})
+        out["doc_id"] = ids
+        ln_idf = out["term_id"].map(
+            {t: math.log(v) for t, v in idf_map.items()}
+        ).to_numpy(np.float64)
+        pos = ln_idf > 0
+        for col, dl, neg in (("ub", "min_dl", 0.0), ("floor", "max_dl", -np.inf)):
+            dlv = np.repeat(spf[dl].to_numpy(np.float64), n)
+            out[col] = np.where(
+                pos,
+                ln_idf * (k1 + 1.0) * tf
+                / (tf + k1 * (1.0 - b + b * dlv / self.avg_len)),
+                neg,
             )
-            if live is not None:
-                ids, tf, salts = ids[live], tf[live], salts[live]
-                min_dl, max_dl = min_dl[live], max_dl[live]
-            if ln_idf > 0:
-                ub_p = ln_idf * (k1 + 1.0) * tf / (
-                    tf + k1 * (1.0 - b + b * min_dl / self.avg_len)
-                )
-                fl_p = ln_idf * (k1 + 1.0) * tf / (
-                    tf + k1 * (1.0 - b + b * max_dl / self.avg_len)
-                )
-            else:
-                ub_p = np.zeros(ids.size)
-                fl_p = np.full(ids.size, -np.inf)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "term_id": np.full(ids.size, tid, dtype=np.int64),
-                        "salt": salts,
-                        "doc_id": ids,
-                        "ub": ub_p,
-                        "floor": fl_p,
-                    }
-                )
-            )
-        if not outs:
-            return None
-        return pd.concat(outs, ignore_index=True)
+        live = self._sparse_live_mask(ids, out["gen"].to_numpy(np.int64))
+        if live is not None:
+            out = out[live]
+        order = np.lexsort((out["doc_id"].to_numpy(), out["term_id"].to_numpy()))
+        return out.iloc[order].reset_index(drop=True)
 
     #: segment-grid resolution for the distributed WAND's range-aligned
     #: dense credits; the driver-side summary is |query terms| x this
@@ -2596,7 +2494,7 @@ class PackedIndex:
         segments only loosens further.  Blocks spanning >
         DIST_WAND_WIDE_CAP segments use their term's global max
         (seg = -1 rows — sound superset).  Returns the surviving blocks
-        with key_cols + min_doc/max_doc."""
+        with key_cols + n/min_doc/max_doc."""
         tlist, others, n_seg = summ["tlist"], summ["others"], summ["n_seg"]
         pt_max = others.max(axis=1)
         oth_pdf = pd.DataFrame(
@@ -2622,7 +2520,7 @@ class PackedIndex:
         # cleared θ
         return (
             summ["bm"].select(
-                *key_cols, "min_doc", "max_doc", "ub", "sp_credit",
+                *key_cols, "n", "min_doc", "max_doc", "ub", "sp_credit",
                 summ["seg_expr"],
             )
             .join(oth_df, ["term_id", "seg"])
@@ -2632,6 +2530,7 @@ class PackedIndex:
             )
             .groupBy(*key_cols)
             .agg(
+                F.first("n").alias("n"),
                 F.first("min_doc").alias("min_doc"),
                 F.first("max_doc").alias("max_doc"),
             )
@@ -2653,514 +2552,255 @@ class PackedIndex:
             return meta2.limit(0)
         return self._seg_survivors_from(summ, sparse_set, key_cols, theta)
 
-    def _wand_topk_distributed(self, qinfo: list[dict], k: int, k1: float, b: float) -> DataFrame:
-        """Fully distributed block-max WAND for head-term territory
-        (metadata too large for the driver).  Only bounded things touch
-        the driver: per-term bounds (|query| rows), seed block metadata
-        (a handful), θ (k rows), and — when the query has driver-sized
-        SPARSE terms — those terms' postings (df-bounded), which buy
-        the same three wins as on the driver-planned path: θ floors,
-        postings-level survival credit (a head block is only credited a
-        rare term's contribution when it truly contains one of its
-        docs), and singleton candidate intervals.  Candidate membership
-        is the is_target flag riding through the decode kernel; the
-        "blocks overlapping the surviving candidate ranges" set is a
-        salt-local interval join (salts are disjoint doc-id ranges)."""
-        import time as _time
 
-        _prev = _time.time()
-        _dbg = bool(os.environ.get("TFIDF_WAND_TIMING"))
+# ---------------------------------------------------------------------------
+# WAND block-metadata sources (PackedIndex._wand_source picks one; the
+# planner, PackedIndex._wand_topk, is shared).  Both answer the same
+# questions: metadata θ, seed blocks, survivors of a θ, and the blocks
+# overlapping a set of candidate doc-id ranges.
+# ---------------------------------------------------------------------------
+class _DriverSource:
+    """Block metadata as an Arrow-fetched pandas frame (at most
+    META_COLLECT_MAX rows).  Prunes with the EXACT doc-range-aligned
+    credit; everything is vectorized numpy, no job after the fetch."""
 
-        def _mk(name: str) -> None:
-            # planning-chain stage timer, printed only when profiling
-            # (TFIDF_WAND_TIMING=1); production queries pay one time()
-            nonlocal _prev
-            now = _time.time()
-            if _dbg:
-                print(f"[wand-dist] {name}: {now - _prev:.3f}s", flush=True)
-            _prev = now
+    def __init__(self, idx: PackedIndex, mp: pd.DataFrame, sp, sparse_ids):
+        self.idx, self.mp, self.sp = idx, mp, sp
+        self.sparse_set = set(sparse_ids) if sp is not None else set()
+        self.term = mp["term_id"].to_numpy(np.int64)
+        self.lo = mp["min_doc"].to_numpy(np.int64)
+        self.hi = mp["max_doc"].to_numpy(np.int64)
+        self.ub = mp["ub"].to_numpy(np.float64)
 
-        tids = [r["term_id"] for r in qinfo]
-        idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
-        tight = self._tight_bounds_ok(k1, b)
-        nonneg = min(float(r["idf"]) for r in qinfo) > 1.0
-        sparse_ids = self._sparse_query_terms(qinfo)
-        sp_pdf = self._sparse_postings_np(sparse_ids, idf_map, k1, b)
-        _mk("sparse_fetch")
-        key_cols = ["term_id", "salt", "block_seq", "gen"]
-        meta_cols = key_cols + ["n", "min_doc", "max_doc", "max_tf", "min_dl"]
-        if tight:
-            meta_cols.append("max_score")
-        # the cached metadata relation is reused ACROSS queries through a
-        # small LRU (serving sessions repeat vocabularies); entries are
-        # immutable per generation and unpersisted on eviction
-        ckey = (tuple(sorted(tids)), tight, float(k1), float(b),
-                int(self.meta.get("generation", 0)))
-        dcache = getattr(self, "_dist_meta_cache", None)
-        if dcache is None:
-            dcache = self._dist_meta_cache = {}
-        ent = dcache.get(ckey)
-        if ent is not None:
-            dcache[ckey] = dcache.pop(ckey)  # LRU touch (move-to-end)
-        else:
-            ent = [
-                self._blocks_for(tids).select(*meta_cols)
-                .withColumn("ub", self._block_ub(idf_map, k1, b, tight))
-                .cache(),
-                None,  # block count, filled by the first query
-            ]
-            # a PackedIndex is a snapshot (its generation never moves),
-            # but drop any stale-generation stragglers defensively, then
-            # LRU-evict overflow — evicted relations unpersist so the
-            # bound holds in executor memory, not just in entry count
-            gen_now = int(self.meta.get("generation", 0))
-            for k_ in [k_ for k_ in dcache if k_[-1] != gen_now]:
-                dcache.pop(k_)[0].unpersist()
-            while len(dcache) >= 4:
-                dcache.pop(next(iter(dcache)))[0].unpersist()
-            dcache[ckey] = ent
-        blocks_meta = ent[0]
-        _mk("meta_cache")
+    def release(self) -> None:
+        pass
 
-        theta = -math.inf
-        # θ floors from sparse postings (job-free beyond the bounded
-        # fetch): each sparse posting scored with its block's max_dl is
-        # a real doc's score lower bound
-        if nonneg and sp_pdf is not None:
-            for tid in sparse_ids:
-                fl = sp_pdf.loc[sp_pdf["term_id"] == tid, "floor"].to_numpy()
-                if fl.size >= k and math.isfinite(fl[0]):
-                    theta = max(
-                        theta,
-                        float(np.partition(fl, fl.size - k)[fl.size - k]),
-                    )
-        theta_fut = None
-        if tight and nonneg:
-            # metadata-only θ (same proof as the driver-planned path:
-            # per-term block max_scores are achieved by k distinct real
-            # docs) — replaces the seed DECODE pass with one tiny
-            # metadata aggregation.  SUBMITTED to a background thread:
-            # θ is only consumed by the survival filter, which is built
-            # after the (independent) segment-summary job — the two
-            # planning jobs overlap instead of running back-to-back.
-            from pyspark.sql import Window
+    def n_blocks(self) -> int:
+        return len(self.mp)
 
-            w = Window.partitionBy("term_id").orderBy(
-                F.desc("max_score"), *key_cols
-            )
-            kth_df = (
-                blocks_meta.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == k)
-                .agg(F.max("max_score"))
-            )
-            pool = getattr(self, "_bg_pool", None)
-            if pool is None:
-                from concurrent.futures import ThreadPoolExecutor
+    def plan(self) -> bool:
+        return len(self.mp) > 0
 
-                pool = self._bg_pool = ThreadPoolExecutor(max_workers=1)
-            theta_fut = pool.submit(lambda: kth_df.first()[0])
-        _mk("theta_submit")
-
-        # survival credits: ub + (other DENSE terms' range-aligned max)
-        # + (other SPARSE terms' postings-level credit) >= θ.  A sparse
-        # term's blocks span nearly the whole doc-id space, so its
-        # global ub would credit every block; the credit join grants it
-        # only to blocks that truly contain one of its (driver-decoded)
-        # docs — salt-equi broadcast hash join with the range check as
-        # a post-filter, output bounded by |query terms| x sparse df.
-        sparse_set = set(sparse_ids) if sp_pdf is not None else set()
-        meta2 = self._sparse_credit_plan(blocks_meta, sp_pdf, sparse_set, key_cols)
-        _mk("credit_plan")
-        summ = self._seg_summary(meta2, tids, sparse_set)
-        _mk("seg_summary")
-        if theta_fut is not None:
-            kth = theta_fut.result()
-            if kth is not None:
-                theta = max(theta, float(kth))
-        _mk("theta_wait")
-        if summ is None:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
-
-        # ---- pass 1 (fallback): θ from the rarest term's best blocks --
-        # seed block METADATA is tiny (top few blocks of one term) and
-        # safe to collect; their doc payloads are not
-        rare = min(qinfo, key=lambda r: (r["df"], r["term"]))
-        seeds = []
-        if not math.isfinite(theta):
-            seeds = (
-                blocks_meta.filter(F.col("term_id") == rare["term_id"])
-                .orderBy(F.desc("ub"), *key_cols)
-                .limit(max(4, (4 * k) // self.config.block_size + 1))
-                .collect()
-            )
-        if seeds:
-            seed_iv = _merge_intervals([(m["min_doc"], m["max_doc"]) for m in seeds])
-            seed_keys = {
-                (m["term_id"], m["salt"], m["block_seq"], m["gen"]) for m in seeds
-            }
-            overlap_cond = None
-            for lo, hi in seed_iv:  # few ORed range predicates, JVM filter
-                c = (F.col("min_doc") <= hi) & (F.col("max_doc") >= lo)
-                overlap_cond = c if overlap_cond is None else (overlap_cond | c)
-            seed_kdf = F.broadcast(
-                _arrow_df(
-                    self.spark,
-                    [k_ + (True,) for k_ in sorted(seed_keys)],
-                    self._KDF_SCHEMA,
-                )
-            )
-            theta_kdf = (
-                blocks_meta.filter(overlap_cond)
-                .select(*key_cols)
-                .join(seed_kdf, key_cols, "left")
-                .fillna({"is_target": False})
-            )
-            top = (
-                self._score_flagged_df(theta_kdf, tids, qinfo, k1, b)
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
-            )
-            if len(top) >= k:
-                theta = top[-1]["score"]
-
-        # ---- pass 2: prune blocks by upper bound (distributed filter) --
-        if not math.isfinite(theta):
-            # no θ means no pruning: the kdf machinery would decode
-            # everything anyway — take the plain exact single pass
-            scored = self._score_decoded(
-                self.decode_postings(tids), qinfo, k1, b
-            )
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        # job-free no-prune detection from the driver-sized segment
-        # grid: when (almost) every occupied cell clears θ the survivor
-        # machinery can only remove noise — skip its jobs entirely and
-        # take the plain exact single pass, which selects the same
-        # top-k (both branches exact; heuristic affects dispatch only)
-        sp_max = 0.0
-        if sparse_set:
-            sp_max = float(
-                sp_pdf[sp_pdf["term_id"].isin(list(sparse_set))]
-                .groupby("term_id")["ub"].max().sum()
-            )
-        if self._seg_cell_survival_est(summ, sp_max, theta) >= 0.97:
-            _mk("noprune_est")
-            scored = self._score_decoded(
-                self.decode_postings(tids), qinfo, k1, b
-            )
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        surviving = self._seg_survivors_from(summ, sparse_set, key_cols, theta)
-        # fused count + collect: ONE bounded job returns the survivor
-        # keys when the set is driver-sized (the common case) — the
-        # separate count job and cache materialization of the old chain
-        # collapse into this single limited collect; only the rare
-        # too-many-survivors branch below re-runs the pipeline cached
-        sk = self._topandas_arrow(
-            surviving.select(*key_cols, "min_doc", "max_doc")
-            .limit(self.DIST_SURV_COLLECT_MAX + 1)
+    def meta_theta(self, k: int):
+        ms = self.mp["max_score"].to_numpy(np.float64)
+        o = np.lexsort((-ms, self.term))
+        ts = self.term[o]
+        starts = np.flatnonzero(np.concatenate(([True], ts[1:] != ts[:-1])))
+        rank = np.arange(ts.size) - np.repeat(
+            starts, np.diff(np.append(starts, ts.size))
         )
-        _mk("survivor_collect")
-        n_surv = len(sk)
-        if n_surv == 0:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
-        small = n_surv <= self.DIST_SURV_COLLECT_MAX
-        if ent[1] is None:
-            # count once per cached metadata relation (a PackedIndex is
-            # a snapshot; the relation is immutable while cached)
-            ent[1] = blocks_meta.count()
-        n_blocks = ent[1]
-        _mk("blocks_count")
-        if small and n_surv >= 0.9 * n_blocks:
-            # pruning removed (almost) nothing — the flag/join machinery
-            # would only add overhead over the plain exact single pass,
-            # which selects the same top-k by the pruning proof (same
-            # cap as the driver-planned path)
-            scored = self._score_decoded(
-                self.decode_postings(tids), qinfo, k1, b
-            )
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        kth = ms[o][rank == k - 1]  # per term with >= k blocks
+        theta = float(kth.max()) if kth.size else -math.inf
+        return lambda: theta
 
-        # ---- pass 3: fused candidate + exact rescore --------------------
-        # Any top-k doc appears in >=1 surviving block; its rows in
-        # PRUNED blocks are still needed for the exact score.  Candidate
-        # doc ranges come from the surviving blocks — collected MERGED
-        # and bounded (precise when the survivor set is driver-sized,
-        # per-salt envelopes otherwise), pushed into both the payload
-        # and doc_dict scans as row-group-prunable predicates, with the
-        # surviving keys broadcast as the is_target flag: ONE scan job,
-        # range-pruned, and the payload relation never shuffles.
-        if not small:
-            # survivor set beyond the driver budget: cache the pipeline
-            # (the envelope aggregation below re-reads it) and get the
-            # exact count for the fallback check + broadcast decision
-            surviving = surviving.cache()
-            n_surv = surviving.count()
-            _mk("survivor_count")
-            if n_surv >= 0.9 * n_blocks:
-                surviving.unpersist()
-                scored = self._score_decoded(
-                    self.decode_postings(tids), qinfo, k1, b
+    def seeds(self, tid: int, n: int) -> pd.DataFrame:
+        ii = np.flatnonzero(self.term == tid)
+        return self.mp.iloc[ii[np.argsort(-self.ub[ii], kind="stable")[:n]]]
+
+    def candidates(self, m_lo, m_hi, targets: pd.DataFrame) -> pd.DataFrame:
+        # targets are rows of mp: their index labels flag them
+        rows = self.mp[_overlap_mask(m_lo, m_hi, self.lo, self.hi)]
+        return rows.assign(is_target=rows.index.isin(targets.index))
+
+    def flagged(self, m_lo, m_hi, targets: pd.DataFrame) -> DataFrame:
+        return self.idx._kdf(self.candidates(m_lo, m_hi, targets))
+
+    def survivors(self, theta: float) -> pd.DataFrame:
+        """For a doc d in block B of term t, any other term t' can only
+        contribute through the ONE t'-block containing d — which must
+        overlap B's doc range.  Bounding t' by the max ub of its
+        OVERLAPPING blocks (not its global max) is what lets multi-term
+        queries prune at all on corpora where per-term global maxima
+        are uniform.  Sparse terms credit by their decoded postings:
+        only blocks that contain one of their ACTUAL docs."""
+        term, lo, hi = self.term, self.lo, self.hi
+        sp_terms = {} if self.sp is None else {
+            int(t): (g["doc_id"].to_numpy(np.int64), g["ub"].to_numpy(np.float64))
+            for t, g in self.sp.groupby("term_id", sort=False)
+        }
+        empty = (np.empty(0, np.int64), np.empty(0))
+        others = np.zeros(term.size)
+        for t2 in np.unique(term):
+            mask = term != t2
+            if int(t2) in self.sparse_set:
+                ids2, ub2 = sp_terms.get(int(t2), empty)
+                others[mask] += _range_max(
+                    ub2,
+                    np.searchsorted(ids2, lo[mask], side="left"),
+                    np.searchsorted(ids2, hi[mask], side="right"),
                 )
-                return scored.orderBy(
-                    F.desc("score"), F.asc("doc_id")
-                ).limit(k)
-        if len(tids) == 1:
-            # one term -> doc-disjoint blocks -> pruned blocks never
-            # participate in the exact rescore (see driver-planned path)
-            if small:
-                scored = self._score_flagged_arrays(
-                    sk["term_id"].to_numpy(np.int64),
-                    sk["salt"].to_numpy(np.int32),
-                    sk["block_seq"].to_numpy(np.int32),
-                    sk["gen"].to_numpy(np.int32),
-                    np.ones(len(sk), dtype=bool), qinfo, k1, b,
-                )
-            else:
-                kdf1 = surviving.select(*key_cols).withColumn(
-                    "is_target", F.lit(True)
-                )
-                if n_surv <= 2_000_000:
-                    kdf1 = F.broadcast(kdf1)
-                scored = self._score_flagged_df(kdf1, tids, qinfo, k1, b)
-        elif small:
-            # survivor set is driver-sized: the limited collect above
-            # already gave ranges, keys and flags in ONE job, and a
-            # second bounded collect gives the candidate blocks —
-            # everything else (interval merge, block_seq pushdown
-            # intervals, survival flags) is numpy.  Surviving SPARSE
-            # blocks enter as their decoded docs' singleton ranges, not
-            # their (enormous) block span.
-            lo_parts, hi_parts = [], []
-            sk_tid = sk["term_id"].to_numpy(np.int64)
-            dense_mask = ~np.isin(sk_tid, list(sparse_set)) if sparse_set else (
-                np.ones(len(sk), dtype=bool)
+                continue
+            ii = np.flatnonzero(term == t2)
+            srt = ii[np.argsort(lo[ii], kind="stable")]
+            # _overlap_credit stays sound for the overlapping block
+            # ranges a generation > 0 index has (running-max ends)
+            others[mask] += _overlap_credit(
+                lo[srt], hi[srt], self.ub[srt], lo[mask], hi[mask]
             )
-            if dense_mask.any():
-                lo_parts.append(sk["min_doc"].to_numpy(np.int64)[dense_mask])
-                hi_parts.append(sk["max_doc"].to_numpy(np.int64)[dense_mask])
-            if sparse_set:
-                for i in np.flatnonzero(~dense_mask):
-                    sel = sp_pdf[
-                        (sp_pdf["term_id"] == sk_tid[i])
-                        & (sp_pdf["salt"] == int(sk["salt"].iloc[i]))
-                        & (sp_pdf["doc_id"] >= int(sk["min_doc"].iloc[i]))
-                        & (sp_pdf["doc_id"] <= int(sk["max_doc"].iloc[i]))
-                    ]
-                    d = sel["doc_id"].to_numpy(np.int64)
-                    lo_parts.append(d)
-                    hi_parts.append(d)
-            lo_all = (
-                np.concatenate(lo_parts) if lo_parts
-                else np.empty(0, np.int64)
+        # 1e-9 slack absorbs float-order differences between θ's and the
+        # bounds' arithmetic — only ever makes pruning LESS aggressive
+        return self.mp[self.ub + others >= theta - 1e-9]
+
+
+class _DistSource:
+    """Block metadata as a cached DataFrame, for head-term territory
+    where it does not fit the driver.  Only bounded things reach the
+    driver: the segment grid (|terms| x DIST_WAND_SEGMENTS), seed block
+    metadata, θ, and survivor keys up to DIST_SURV_COLLECT_MAX — past
+    that, survivors stay a relation (:meth:`large_topk`)."""
+
+    def __init__(self, idx: PackedIndex, tids, blocks: DataFrame, sp, sparse_ids):
+        self.idx, self.tids, self.blocks, self.sp = idx, tids, blocks, sp
+        self.sparse_set = set(sparse_ids) if sp is not None else set()
+        self.summ = self.count = None
+        self.planned = False
+
+    def release(self) -> None:
+        self.blocks.unpersist()
+
+    def n_blocks(self) -> int:
+        if self.count is None:
+            # once per entry: the relation is immutable while cached
+            self.count = self.blocks.count()
+        return self.count
+
+    def plan(self) -> bool:
+        """The segment-grid summary job, once per entry (it does not
+        depend on θ or k)."""
+        if not self.planned:
+            meta2 = self.idx._sparse_credit_plan(
+                self.blocks, self.sp, self.sparse_set, _KEY_COLS
             )
-            if lo_all.size == 0:
-                # all survivors sparse with no live docs (stale-gen
-                # artifact): fall through to the always-sound exact pass
-                surviving.unpersist()
-                scored = self._score_decoded(
-                    self.decode_postings(tids), qinfo, k1, b
-                )
-                return scored.orderBy(
-                    F.desc("score"), F.asc("doc_id")
-                ).limit(k)
-            r_lo, r_hi = _merge_ranges(lo_all, np.concatenate(hi_parts))
-            if r_lo.size > 256:
-                dr = [(int(r_lo[0]), int(r_hi[-1]))]
-            else:
-                dr = list(zip(r_lo.tolist(), r_hi.tolist()))
-            ov = None
-            for lo, hi in dr:
-                c = (F.col("min_doc") <= int(hi)) & (
-                    F.col("max_doc") >= int(lo)
-                )
-                ov = c if ov is None else (ov | c)
-            cand = self._topandas_arrow(
-                blocks_meta.filter(ov).select(*key_cols, "n")
-            )
-            _mk("candidate_collect")
-            part_vol = int(cand["n"].sum())
-            surv_set = set(zip(*(sk[c].to_numpy() for c in key_cols)))
-            flags = np.fromiter(
-                (
-                    kk in surv_set
-                    for kk in zip(*(cand[c].to_numpy() for c in key_cols))
-                ),
-                dtype=bool,
-                count=len(cand),
-            )
-            # pruned-volume driver rescore (same adaptive move as the
-            # driver-planned path): when the CANDIDATE volume after
-            # pruning is driver-sized and doc stats are pinned, one
-            # Arrow fetch + numpy beats the distributed join/agg's two
-            # shuffles — the distributed rescore below remains the
-            # unbounded-scale fallback
-            if (
-                part_vol
-                <= min(self.DRIVER_VOLUME_MAX, self._driver_entry_budget())
-                and self._doc_stats_np() is not None
-            ):
-                rows = self._rescore_driver_rows(
-                    cand["term_id"].to_numpy(np.int64),
-                    cand["salt"].to_numpy(np.int32),
-                    cand["block_seq"].to_numpy(np.int32),
-                    cand["gen"].to_numpy(np.int32),
-                    flags, idf_map, k1, b, k,
-                )
-                _mk("rescore_driver")
-                surviving.unpersist()
-                return _arrow_df(
-                    self.spark, rows, "doc_id long, score double, doc_len long"
-                )
-            # The payload files are sorted by (term_id, block_seq), so a
-            # min_doc/max_doc predicate cannot prune row groups — but
-            # block_seq is doc-id-monotone within (term, salt, gen), so
-            # the candidate doc ranges translate into per-group
-            # block_seq INTERVALS whose predicate aligns with the file
-            # sort order and prunes the payload IO itself.  Built ONLY
-            # on this distributed-fallback path: the expression is a few
-            # hundred py4j Column ops — real driver milliseconds the
-            # driver-rescore path above must not pay.
-            blk = ov
-            grp = cand.groupby(["term_id", "salt", "gen"])["block_seq"].agg(
-                ["min", "max"]
-            )
-            if 0 < len(grp) <= 256:
-                blk = None
-                for (t, s, g), r in grp.iterrows():
-                    c = (
-                        (F.col("term_id") == int(t))
-                        & (F.col("salt") == int(s))
-                        & (F.col("gen") == int(g))
-                        & F.col("block_seq").between(
-                            int(r["min"]), int(r["max"])
-                        )
-                    )
-                    blk = c if blk is None else (blk | c)
-            scored = self._score_flagged_arrays(
-                cand["term_id"].to_numpy(np.int64),
-                cand["salt"].to_numpy(np.int32),
-                cand["block_seq"].to_numpy(np.int32),
-                cand["gen"].to_numpy(np.int32),
-                flags, qinfo, k1, b, doc_ranges=dr, block_filter=blk,
-            )
-        else:
-            # survivor set too large to collect precisely: per-salt
-            # envelopes for the DENSE survivors (salts partition the
-            # doc-id space, so these are disjoint and the count is
-            # bounded by n_salts) UNIONED with the live doc ids of
-            # surviving SPARSE blocks as singleton ranges — a top-k doc
-            # whose score clears θ only through a sparse survivor may
-            # sit in a salt with no dense survivor, and the envelopes
-            # alone would filter it out of the doc_dict join (silently
-            # wrong top-k).  The sparse side is driver-sized by
-            # construction: sparse terms hold few blocks and their
-            # postings (sp_pdf) are already decoded on the driver.
-            # Surviving keys ride as a (possibly broadcast) flag
-            # relation into a fully distributed rescore.
-            surv_keys = surviving.select(*key_cols).withColumn(
-                "is_target", F.lit(True)
-            )
-            kdf = F.broadcast(surv_keys) if n_surv <= 2_000_000 else surv_keys
-            dense_surv = (
-                surviving.filter(~F.col("term_id").isin(list(sparse_set)))
-                if sparse_set
-                else surviving
-            )
-            ivp = self._topandas_arrow(
-                dense_surv.groupBy("salt").agg(
-                    F.min("min_doc").alias("min_doc"),
-                    F.max("max_doc").alias("max_doc"),
-                )
-            )
-            lo_parts = [ivp["min_doc"].to_numpy(np.int64)]
-            hi_parts = [ivp["max_doc"].to_numpy(np.int64)]
-            if sparse_set:
-                ssk = self._topandas_arrow(
-                    surviving.filter(
-                        F.col("term_id").isin(list(sparse_set))
-                    ).select("term_id", "salt", "min_doc", "max_doc")
-                )
-                for i in range(len(ssk)):
-                    sel = sp_pdf[
-                        (sp_pdf["term_id"] == int(ssk["term_id"].iloc[i]))
-                        & (sp_pdf["salt"] == int(ssk["salt"].iloc[i]))
-                        & (sp_pdf["doc_id"] >= int(ssk["min_doc"].iloc[i]))
-                        & (sp_pdf["doc_id"] <= int(ssk["max_doc"].iloc[i]))
-                    ]
-                    d = sel["doc_id"].to_numpy(np.int64)
-                    lo_parts.append(d)
-                    hi_parts.append(d)
-            lo_all = np.concatenate(lo_parts)
-            if lo_all.size == 0:
-                # every survivor is a sparse block with no live docs
-                # (stale-generation artifact) — the plain exact pass is
-                # always sound, never guess at an empty result
-                surviving.unpersist()
-                scored = self._score_decoded(
-                    self.decode_postings(tids), qinfo, k1, b
-                )
-                return scored.orderBy(
-                    F.desc("score"), F.asc("doc_id")
-                ).limit(k)
-            r_lo, r_hi = _merge_ranges(lo_all, np.concatenate(hi_parts))
-            if r_lo.size > 256:
-                dr = [(int(r_lo[0]), int(r_hi[-1]))]
-            else:
-                dr = list(zip(r_lo.tolist(), r_hi.tolist()))
-            ov = None
-            for lo, hi in dr:
-                c = (F.col("min_doc") <= int(hi)) & (
-                    F.col("max_doc") >= int(lo)
-                )
-                ov = c if ov is None else (ov | c)
-            scored = self._score_flagged_df(
-                kdf, tids, qinfo, k1, b,
-                doc_ranges=dr, block_filter=ov, kdf_how="left",
-            )
+            self.summ = self.idx._seg_summary(meta2, self.tids, self.sparse_set)
+            self.planned = True
+        return self.summ is not None
+
+    def meta_theta(self, k: int):
+        """Submitted to a background thread: θ is only consumed by the
+        survival filter, so this tiny aggregation overlaps the grid
+        summary job instead of running back-to-back with it."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.sql import Window
+
+        w = Window.partitionBy("term_id").orderBy(F.desc("max_score"), *_KEY_COLS)
+        kth_df = (
+            self.blocks.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == k)
+            .agg(F.max("max_score"))
+        )
+        pool = self.idx.__dict__.get("_bg_pool")
+        if pool is None:
+            pool = self.idx._bg_pool = ThreadPoolExecutor(max_workers=1)
+        fut = pool.submit(lambda: kth_df.first()[0])
+
+        def kth() -> float:
+            v = fut.result()
+            return -math.inf if v is None else float(v)
+
+        return kth
+
+    def seeds(self, tid: int, n: int) -> pd.DataFrame:
         rows = (
-            scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
+            self.blocks.filter(F.col("term_id") == tid)
+            .orderBy(F.desc("ub"), *_KEY_COLS)
+            .limit(n)
+            .select(*_KEY_COLS, "min_doc", "max_doc")
+            .collect()
         )
-        _mk("rescore_distributed")
-        # the result is k rows — materializing it here lets `surviving`
-        # be released immediately; the block-metadata relation stays
-        # persisted in the bounded (4-entry LRU) _dist_meta_cache for
-        # reuse by later queries in a serving session
-        surviving.unpersist()
-        return _arrow_df(
-            self.spark,
-            [(r["doc_id"], r["score"], r["doc_len"]) for r in rows],
-            "doc_id long, score double, doc_len long",
+        return pd.DataFrame(
+            [tuple(r) for r in rows], columns=_KEY_COLS + ["min_doc", "max_doc"]
         )
 
-    def _score_candidates(
-        self,
-        cand_ids: np.ndarray,
-        tids: list[int],
-        qinfo: list[dict],
-        k1: float,
-        b: float,
-    ) -> DataFrame:
-        """Exact BM25 for a fixed candidate set: decode only blocks whose
-        doc range contains a candidate (searchsorted check on broadcast
-        sorted ids), then filter decoded rows to the candidates."""
-        sc = self.spark.sparkContext
-        bc = sc.broadcast(cand_ids)
-        hit_blocks = self.blocks_overlapping_ids(self._blocks_for(tids), bc)
+    def _overlapping(self, m_lo, m_hi) -> DataFrame:
+        return self.blocks.filter(
+            _ranges_pred("min_doc", "max_doc", _collapse_ranges(m_lo, m_hi))
+        )
 
-        def decode_filtered(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ids = bc.value
-            for out in _decode_blocks_iter(batches):
-                pos = np.searchsorted(ids, out["doc_id"].to_numpy())
-                keep = (pos < ids.size) & (
-                    ids[np.minimum(pos, ids.size - 1)] == out["doc_id"].to_numpy()
+    def flagged(self, m_lo, m_hi, targets: pd.DataFrame) -> DataFrame:
+        tk = F.broadcast(_arrow_df(
+            self.idx.spark, targets[_KEY_COLS].assign(is_target=True), _KDF_SCHEMA
+        ))
+        return (
+            self._overlapping(m_lo, m_hi).select(*_KEY_COLS)
+            .join(tk, _KEY_COLS, "left")
+            .fillna({"is_target": False})
+        )
+
+    def candidates(self, m_lo, m_hi, targets: pd.DataFrame) -> pd.DataFrame:
+        cand = self.idx._topandas_arrow(
+            self._overlapping(m_lo, m_hi).select(*_KEY_COLS, "n")
+        )
+        m = cand.merge(
+            targets[_KEY_COLS].drop_duplicates(), on=_KEY_COLS, how="left",
+            indicator=True,
+        )
+        return m.drop(columns="_merge").assign(
+            is_target=(m["_merge"] == "both").to_numpy()
+        )
+
+    def survivors(self, theta: float):
+        """Survivor keys (one bounded collect), None when the grid says
+        (almost) nothing would be pruned, or — past
+        DIST_SURV_COLLECT_MAX — the survivor relation itself."""
+        idx = self.idx
+        sp_max = 0.0
+        if self.sparse_set:
+            sp_max = float(self.sp.groupby("term_id")["ub"].max().sum())
+        # job-free no-prune detection from the driver-sized grid: when
+        # (almost) every occupied cell clears θ, skip the survivor jobs
+        if idx._seg_cell_survival_est(self.summ, sp_max, theta) >= 0.97:
+            return None
+        surviving = idx._seg_survivors_from(
+            self.summ, self.sparse_set, _KEY_COLS, theta
+        )
+        sk = idx._topandas_arrow(surviving.limit(idx.DIST_SURV_COLLECT_MAX + 1))
+        return surviving if len(sk) > idx.DIST_SURV_COLLECT_MAX else sk
+
+    def large_topk(self, surviving: DataFrame, qinfo, k, k1, b) -> DataFrame:
+        """Survivor set beyond the driver budget: the keys ride as a
+        (possibly broadcast) flag relation into a fully distributed
+        rescore.  Candidate ranges: per-salt envelopes of the DENSE
+        survivors (salts partition the doc-id space, so these are
+        disjoint and bounded by n_salts) plus the live docs of surviving
+        SPARSE blocks as singletons — a top-k doc that clears θ only
+        through a sparse survivor may sit in a salt with no dense
+        survivor, and the envelopes alone would filter it out of the
+        doc_dict join (silently wrong top-k)."""
+        idx, tids = self.idx, self.tids
+        surviving = surviving.cache()
+        try:
+            n_surv = surviving.count()
+            if n_surv >= 0.9 * self.n_blocks():
+                return idx._exact_topk(qinfo, k, k1, b)
+            kdf = surviving.select(*_KEY_COLS).withColumn("is_target", F.lit(True))
+            if n_surv <= 2_000_000:
+                kdf = F.broadcast(kdf)
+            if len(tids) == 1:
+                scored = idx._score_flagged_df(kdf, tids, qinfo, k1, b)
+            else:
+                sparse = F.col("term_id").isin(list(self.sparse_set))
+                env = idx._topandas_arrow(
+                    surviving.filter(~sparse).groupBy("salt").agg(
+                        F.min("min_doc").alias("min_doc"),
+                        F.max("max_doc").alias("max_doc"),
+                    )
                 )
-                yield out[keep]
-
-        decoded = hit_blocks.select(
-            "term_id", "n", "doc_deltas", "tfs", "gen"
-        ).mapInPandas(decode_filtered, schema=_DECODE_SCHEMA)
-        return self._score_decoded(decoded, qinfo, k1, b)
+                surv_sp = idx._topandas_arrow(
+                    surviving.filter(sparse).select(*_KEY_COLS)
+                ) if self.sparse_set else None
+                ranges = _candidate_ranges(env, self.sp, surv_sp)
+                if not ranges[0].size:
+                    return idx._exact_topk(qinfo, k, k1, b)
+                dr = _collapse_ranges(*ranges)
+                scored = idx._score_flagged_df(
+                    kdf, tids, qinfo, k1, b, doc_ranges=dr,
+                    block_filter=_ranges_pred("min_doc", "max_doc", dr),
+                    kdf_how="left",
+                )
+            # the result is k rows — materializing it here lets
+            # `surviving` be released immediately
+            rows = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
+        finally:
+            surviving.unpersist()
+        return _arrow_df(idx.spark, [tuple(r) for r in rows], _TOPK_SCHEMA)

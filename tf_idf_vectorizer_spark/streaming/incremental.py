@@ -275,6 +275,23 @@ class IncrementalIndex:
         ``meta["norms"]`` flips False unless ``refresh_norms=True``,
         which runs :meth:`refresh_norms` after the batch.
         """
+        broadcasts: list = []
+        try:
+            return self._apply_batch(
+                broadcasts, adds, delete_ids, key_col, text_col,
+                refresh_norms, tf_adds, tf_add_ids,
+            )
+        finally:
+            # the DF-correction broadcasts are spent once the commit's
+            # dictionary write ran; a long-running ingest process must
+            # not accrete one pair per batch
+            for h in broadcasts:
+                h.destroy()
+
+    def _apply_batch(
+        self, broadcasts, adds, delete_ids, key_col, text_col, refresh_norms,
+        tf_adds, tf_add_ids,
+    ) -> dict:
         if adds is not None and tf_adds is not None:
             raise ValueError("pass adds (text) OR tf_adds (counts), not both")
         spark = self.spark
@@ -376,6 +393,7 @@ class IncrementalIndex:
             if dying_rows:
                 ids = np.array(dead_ids, dtype=np.int64)
                 bc = spark.sparkContext.broadcast(ids)
+                broadcasts.append(bc)
                 blocks = spark.read.schema(POSTINGS_FILE_SCHEMA).parquet(
                     postings_path
                 ).filter(F.col("gen") <= committed_gen)
@@ -401,6 +419,7 @@ class IncrementalIndex:
                     [r["gen"] for r in dying_rows], np.int64
                 )[d_ord]
                 bc_dying = spark.sparkContext.broadcast((d_ids, d_gens))
+                broadcasts.append(bc_dying)
 
                 def _dead_counts(batches):
                     import pandas as _pd
@@ -705,9 +724,12 @@ class IncrementalIndex:
                 # and doubles the table's disk footprint at scale
             )
             new_tables["doc_dict"] = dd_name
-        meta["n_terms"] = int(
-            spark.read.parquet(f"{self.dir}/{td_name}").count()
-        )
+        # term_bytes feeds PackedIndex._can_pin_dict: recount it in the
+        # same aggregation as n_terms (new terms change both)
+        n_terms, term_bytes = spark.read.parquet(f"{self.dir}/{td_name}").agg(
+            F.count("*"), F.sum(F.length("term"))
+        ).first()
+        meta["n_terms"], meta["term_bytes"] = int(n_terms), int(term_bytes or 0)
         _mark("dict_writes")
         _mark("commit")
         meta["batch_phases"] = phases
@@ -878,8 +900,12 @@ class IncrementalIndex:
                 ),
                 schema=out_schema,
             )
-            self._write_compacted(spark, idx, meta, packed, n_salts)
+            try:
+                self._write_compacted(idx, meta, packed, n_salts)
+            finally:
+                bc.destroy()
             return
+        bc = None
         if ds is not None:
             import pandas as _pd
 
@@ -943,11 +969,14 @@ class IncrementalIndex:
             idf_df=idx.term_dict.select("term_id", "idf"),
             max_doc_bound=max_doc_id,
         )
-        self._write_compacted(spark, idx, meta, packed, n_salts)
+        try:
+            self._write_compacted(idx, meta, packed, n_salts)
+        finally:
+            if bc is not None:
+                bc.destroy()
 
     def _write_compacted(
         self,
-        spark: SparkSession,
         idx: PackedIndex,
         meta: dict,
         packed: DataFrame,
