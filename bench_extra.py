@@ -122,7 +122,11 @@ def mode_incr():
 
 def mode_pack():
     from tf_idf_vectorizer_spark.functions.tokenize import term_frequencies
-    from tf_idf_vectorizer_spark.operators.index_build import pack_blocks_jvm
+    from tf_idf_vectorizer_spark.operators.index_build import (
+        pack_blocks_jvm,
+        salt_col,
+        write_postings,
+    )
     from tf_idf_vectorizer_spark.sources.synth import synth_corpus
 
     n = int(os.environ.get("N_DOCS", "100000"))
@@ -133,7 +137,7 @@ def mode_pack():
     salt_range = max(1, (n + 16) // 16)
     rows = tf.select(
         F.xxhash64("term").alias("term_id"),
-        (F.col("doc_id") / F.lit(salt_range)).cast("int").alias("salt"),
+        salt_col(salt_range),
         "doc_id",
         F.col("tf").cast("int").alias("tf"),
         F.col("doc_len").cast("int").alias("doc_len"),
@@ -159,11 +163,7 @@ def mode_pack():
     noop(full, "full_pack")
     tmp = tempfile.mkdtemp(prefix="bx_pack_")
     t0 = time.time()
-    (full.repartition(64, "salt")
-     .sortWithinPartitions("salt", "term_id", "block_seq")
-     .write.partitionBy("salt")
-     .option("parquet.block.size", str(CFG.pq_rowgroup_bytes))
-     .mode("overwrite").parquet(f"{tmp}/p"))
+    write_postings(full, f"{tmp}/p", 64, CFG.pq_rowgroup_bytes)
     _emit(mode="pack", which="parquet_write", sec=time.time() - t0)
     spark.stop()
 

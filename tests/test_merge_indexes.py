@@ -125,3 +125,36 @@ def test_merge_mutated_index(spark, sf_smoke, tmp_path):
         _rows(want.bm25_topk(TERMS + ["mutated"], k=20, mode="exact")),
         tol=1e-9,
     )
+
+
+def test_merged_doc_dict_keeps_layout(spark, tmp_path):
+    """A merged index keeps the fresh-build doc_dict layout (range-
+    partitioned files sorted by doc_id), or the WAND rescore's doc-range
+    pushdown stops pruning on it.  Interleaved ids (A even, B odd) make
+    an unsorted union visible."""
+    import glob
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from tf_idf_vectorizer_spark.sources.synth import synth_corpus
+
+    base = synth_corpus(spark, 200, vocab=300, seed=9).select("doc_id", "text")
+    dir_a, dir_b = str(tmp_path / "a"), str(tmp_path / "b")
+    build_index(spark, base.select((F.col("doc_id") * 2).alias("doc_id"), "text"),
+                dir_a, config=CFG)
+    build_index(spark, base.select((F.col("doc_id") * 2 + 1).alias("doc_id"), "text"),
+                dir_b, config=CFG)
+    out = str(tmp_path / "merged")
+    merge_indexes(spark, dir_a, dir_b, out, CFG)
+    files = sorted(glob.glob(f"{out}/doc_dict/*.parquet"))
+    assert files
+    spans = []
+    for f in files:
+        d = np.asarray(pq.read_table(f, columns=["doc_id"]).column("doc_id"))
+        assert bool(np.all(d[:-1] <= d[1:])), f"{f} not sorted by doc_id"
+        spans.append((int(d[0]), int(d[-1])))
+    spans.sort()
+    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
+        assert hi1 <= lo2, "doc_dict files overlap — not range partitioned"
+    assert PackedIndex(spark, out, CFG).doc_num == 400

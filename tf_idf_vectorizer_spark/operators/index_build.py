@@ -46,7 +46,6 @@ postings are written under ``postings/salt=S/`` with a manifest row
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from collections.abc import Iterator
@@ -57,9 +56,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig, with_effective_tf
-from tf_idf_vectorizer_spark.functions.tokenize import term_frequencies
 from tf_idf_vectorizer_spark.operators.codec import encode_varint_blocks
 from tf_idf_vectorizer_spark.operators.stats import corpus_stats, doc_stats, idf_table
+from tf_idf_vectorizer_spark.query.packed import _decode_batch, live_mask
 
 BLOCK_SCHEMA = (
     "term_id long, salt int, block_seq int, n int, min_doc long, "
@@ -87,66 +86,39 @@ def make_live_repacker(
     avg_len: float,
     salt_range: int,
 ):
-    """mapInPandas body for the budget-gated compact fast path (guide
-    §8: every shuffle but the last moves a lightweight proxy — here the
+    """mapInPandas body of compact's pinned tier (guide §8: every
+    shuffle but the last moves a lightweight proxy — here the
     COMPRESSED block payloads cross the one exchange, never the decoded
     posting rows).  Per partition, fully vectorized numpy: decode every
-    block, drop rows whose (doc_id, gen) misses the broadcast doc stats,
-    re-sort by (term_id, salt, doc_id), re-slice into ``block_size``
-    blocks and re-encode — emitting gen-0 rows in POSTINGS_FILE_SCHEMA,
-    byte- and bit-identical to ``pack_blocks_jvm`` over the same live
-    rows (pinned by tests/test_compact_repack.py: identical output
-    files, including ``max_score``, whose per-pair arithmetic below
-    replicates the JVM expression operation-for-operation and whose
-    ln(idf) values are COLLECTED from a JVM ``F.log`` projection rather
-    than recomputed with numpy's differently-rounded log).
+    block (``_decode_batch``), drop rows whose (doc_id, gen) misses the
+    broadcast doc stats, re-sort by (term_id, salt, doc_id), re-slice
+    into ``block_size`` blocks and re-encode — emitting gen-0
+    ``repack_schema()`` rows.  Each block carries its best per-pair BM25
+    impact ``best``, which ``block_max_score`` turns into ``max_score``
+    in the JVM after ``join_idf``, so the written files are byte- and
+    bit-identical to ``pack_blocks_jvm`` over the same live rows (pinned
+    by tests/test_compact_repack.py).
 
-    ``bc`` broadcasts (sorted doc_ids, doc_lens int64, gens,
-    sorted ln_idf term_ids, ln_idf values)."""
+    ``bc`` broadcasts (sorted doc_ids, doc_lens int64, gens)."""
     kp1 = k1 + 1.0
     one_minus_b = 1.0 - b
 
     def repack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_v, dls_v, gens_v, ln_tids, ln_vals = bc.value
+        ids_v, dls_v, gens_v = bc.value
         parts = [p for p in batches if len(p)]
-        if not parts or ids_v.size == 0:  # no committed docs -> no live rows
+        if not parts:
             return
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        from tf_idf_vectorizer_spark.operators.codec import decode_varint
-
-        n = pdf["n"].to_numpy(np.int64)
-        deltas = decode_varint(
-            b"".join(bytes(x) for x in pdf["doc_deltas"])
-        ).astype(np.int64)
-        tf = decode_varint(
-            b"".join(bytes(x) for x in pdf["tfs"])
-        ).astype(np.int64)
-        starts = np.concatenate(([0], np.cumsum(n)[:-1]))
-        total = np.cumsum(deltas)
-        corr = np.zeros(len(n), dtype=np.int64)
-        corr[1:] = total[starts[1:] - 1]
-        docs = total - np.repeat(corr, n)
-        tids = np.repeat(pdf["term_id"].to_numpy(np.int64), n)
-        gens = np.repeat(pdf["gen"].to_numpy(np.int64), n)
-        # liveness: (doc_id, gen) must match the committed doc_dict row
-        pos = np.searchsorted(ids_v, docs)
-        posc = np.minimum(pos, max(ids_v.size - 1, 0))
-        ok = (
-            (pos < ids_v.size)
-            & (ids_v[posc] == docs)
-            & (gens_v[posc] == gens)
+        n, docs, tf = _decode_batch(pdf)
+        ok, pos = live_mask(
+            ids_v, gens_v, docs, np.repeat(pdf["gen"].to_numpy(np.int64), n)
         )
         if not ok.any():
             return
-        docs = docs[ok]
-        tf = tf[ok]
-        tids = tids[ok]
-        dls = dls_v[posc[ok]]
+        tids = np.repeat(pdf["term_id"].to_numpy(np.int64), n)[ok]
+        docs, tf, dls = docs[ok], tf[ok], dls_v[pos[ok]]
         order = np.lexsort((docs, tids))
-        docs = docs[order]
-        tf = tf[order]
-        tids = tids[order]
-        dls = dls[order]
+        docs, tf, tids, dls = docs[order], tf[order], tids[order], dls[order]
         m = docs.size
         # salt recomputed from doc_id, not read from the block row (an
         # all-empty corpus has ZERO posting files, so the salt partition
@@ -174,18 +146,7 @@ def make_live_repacker(
             one_minus_b + (b * dls.astype(np.float64)) / avg_len
         )
         imp = tfd * kp1 / denom
-        best = np.maximum.reduceat(imp, b_starts)
         bt = tids[b_starts]
-        if ln_tids.size:
-            lp = np.searchsorted(ln_tids, bt)
-            lpc = np.minimum(lp, ln_tids.size - 1)
-            has = (lp < ln_tids.size) & (ln_tids[lpc] == bt)
-            ln = np.where(has, ln_vals[lpc], np.nan)
-        else:
-            ln = np.full(bt.size, np.nan)
-        # when(ln_idf > 0, ln_idf * best).otherwise(0.0); a missing term
-        # (NaN here, null in the JVM) lands in the 0.0 branch both ways
-        max_score = np.where(ln > 0, ln * best, 0.0)
         yield pd.DataFrame(
             {
                 "term_id": bt,
@@ -197,7 +158,7 @@ def make_live_repacker(
                 "max_tf": np.maximum.reduceat(tf, b_starts),
                 "min_dl": np.minimum.reduceat(dls, b_starts),
                 "max_dl": np.maximum.reduceat(dls, b_starts),
-                "max_score": max_score,
+                "best": np.maximum.reduceat(imp, b_starts),
                 "doc_deltas": encode_varint_blocks(dd, b_starts),
                 "tfs": encode_varint_blocks(tf, b_starts),
                 "bucket": (bt % term_buckets).astype(np.int32),
@@ -206,6 +167,44 @@ def make_live_repacker(
         )
 
     return repack
+
+
+def repack_schema():
+    """``make_live_repacker``'s output schema: the postings file schema
+    with ``best`` in place of ``max_score``, declaring the nullability
+    the JVM pack derives (posexplode pos / size() / lit are non-null),
+    so the written files are BYTE-identical, footer included."""
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(
+        POSTINGS_FILE_SCHEMA.replace("max_score", "best")
+    )
+    for f in schema.fields:
+        if f.name in ("block_seq", "n", "gen"):
+            f.nullable = False
+    return schema
+
+
+def join_idf(blocks: DataFrame, idf_df: DataFrame) -> DataFrame:
+    """Broadcast-join the (term_id, idf) table onto ``blocks`` (posting
+    runs in pack_blocks_jvm, finished blocks in compact's repacker) —
+    the one place a posting pack reads idf."""
+    return blocks.join(
+        F.broadcast(
+            idf_df.select("term_id", F.col("idf").cast("double").alias("idf"))
+        ),
+        "term_id",
+        "left",
+    )
+
+
+def block_max_score(best):
+    """Per-block max BM25 score from the block's best per-pair impact and
+    the joined ``idf`` column.  when(>0) not when(<=0): a term missing
+    from the idf table has null ln_idf, which must land in the 0.0
+    branch, not null the score."""
+    ln_idf = F.log(F.col("idf"))
+    return F.when(ln_idf > 0, ln_idf * best).otherwise(F.lit(0.0))
 
 
 def varint_width(bound: int | None) -> int:
@@ -292,12 +291,89 @@ def write_term_dict(
     ).mode("overwrite").parquet(path)
 
 
-def one_shuffle_pack_ok(spark: SparkSession, n_salts: int) -> bool:
-    """True when the salt-partitioned single-shuffle pack can fill the
-    cluster (parallelism = n_salts): n_salts >= 2x defaultParallelism.
-    Below that, the (term_id, salt)-shuffled agg + blocks reshuffle is
-    faster (A/B at 32 cores / 8 salts: 3x)."""
-    return int(n_salts) >= 2 * int(spark.sparkContext.defaultParallelism)
+def salt_col(salt_range: int):
+    """The posting salt: doc-id RANGES of ``salt_range`` docs."""
+    return (F.col("doc_id") / F.lit(int(salt_range))).cast("int").alias("salt")
+
+
+def live_salted_rows(idx, salt_range: int) -> DataFrame:
+    """Live decoded postings of a PackedIndex — rows whose (doc_id, gen)
+    matches doc_dict — salted for ``pack_blocks_jvm``:
+    (term_id, salt, doc_id, tf, doc_len).  The distributed repack input
+    of compact and merge."""
+    return idx.decode_postings(None).join(
+        idx.doc_dict.select("doc_id", "gen", "doc_len"), ["doc_id", "gen"]
+    ).select("term_id", salt_col(salt_range), "doc_id", "tf", "doc_len")
+
+
+def write_postings(
+    packed: DataFrame, path: str, n_parts: int, rowgroup_bytes: int,
+    mode: str = "overwrite",
+) -> None:
+    """THE postings writer (build, batch append, compact, merge): the
+    blocks (small, compressed) reshuffle to the salt layout — one
+    directory per salt, one (term_id, block_seq)-sorted file inside
+    (parquet row-group min/max pruning; listing O(salts)).
+
+    The sort MUST lead with the partitionBy column: FileFormatWriter
+    requires its output ordered by the partition columns and will
+    otherwise insert its own SortExec(salt), whose external-sort spill
+    merge interleaves equal-salt rows from different chunks — silently
+    shredding the (term_id, block_seq) file order that the row-group
+    term index depends on (observed: ~68 sorted runs per file, every
+    per-group term_id range ~full-vocab, zero pruning).  Bounded row
+    groups over that layout are the coarse term index in the parquet
+    stats (see EngineConfig.pq_rowgroup_bytes)."""
+    packed.repartition(int(n_parts), "salt").sortWithinPartitions(
+        "salt", "term_id", "block_seq"
+    ).write.partitionBy("salt").option(
+        "parquet.block.size", str(int(rowgroup_bytes))
+    ).mode(mode).parquet(path)
+
+
+def write_lineage(
+    spark: SparkSession, postings_path: str, manifest_path: str,
+    phase: str, mode: str, where=None,
+) -> None:
+    """Per-salt lineage rows (salt, phase, rows_in, rows_out, checksum,
+    ts) from the WRITTEN posting blocks matching ``where`` (north rule:
+    per-partition lineage + metrics).  Metadata columns only — parquet
+    column pruning never touches the payloads, and the packed relation
+    is never cached (it would not fit at 10^12 docs).  Explicit schema:
+    a corpus (or batch) whose every doc tokenizes to nothing writes ZERO
+    posting files, and schema inference on the empty dir would fail."""
+    written = spark.read.schema(POSTINGS_FILE_SCHEMA).parquet(postings_path)
+    if where is not None:
+        written = written.filter(where)
+    written.groupBy("salt").agg(
+        F.sum("n").alias("rows_in"),
+        F.expr(
+            "bit_xor(xxhash64(term_id, block_seq, n, min_doc, max_doc))"
+        ).alias("checksum"),
+    ).select(
+        "salt", F.lit(phase).alias("phase"), "rows_in",
+        F.col("rows_in").alias("rows_out"), "checksum",
+        F.current_timestamp().alias("ts"),
+    ).write.mode(mode).parquet(manifest_path)
+
+
+def write_doc_dict(df: DataFrame, path: str, n_rows: int | None = None) -> None:
+    """doc_dict write in the fresh-build layout: range-partitioned and
+    sorted by doc_id, so the WAND rescore's candidate doc-range
+    predicates prune row groups (a pruned rescore touches a handful of
+    candidate ranges, not the whole dictionary; measured 2x+ on
+    post-compact query latency when a rewrite lost that layout).
+    Shared by build, batch rewrites, refresh_norms, compact and merge.
+
+    File count is shuffle.partitions / 4; ``n_rows`` (when known) caps
+    it at ~1M docs per file, so a 5k-doc build writes ONE sorted file
+    while a 10^9-doc build still fans out.  A single file is written via
+    coalesce — no repartitionByRange sampling job."""
+    parts = max(1, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")) // 4)
+    if n_rows is not None:
+        parts = max(1, min(parts, -(-int(n_rows) // 1_000_000)))
+    w = df.coalesce(1) if parts == 1 else df.repartitionByRange(parts, "doc_id")
+    w.sortWithinPartitions("doc_id").write.mode("overwrite").parquet(path)
 
 
 def pack_blocks_jvm(
@@ -348,15 +424,7 @@ def pack_blocks_jvm(
     )
     has_idf = idf_df is not None
     if has_idf:
-        g_all = g_all.join(
-            F.broadcast(
-                idf_df.select(
-                    "term_id", F.col("idf").cast("double").alias("idf")
-                )
-            ),
-            "term_id",
-            "left",
-        )
+        g_all = join_idf(g_all, idf_df)
     run = F.col("run")
     n_blocks = F.ceil(F.size(run) / F.lit(block_size)).cast("int")
     g = (
@@ -402,7 +470,6 @@ def pack_blocks_jvm(
     # trusted only while meta generation == 0 and (k1, b) match the
     # build (0.0 when idf is not carried, e.g. delta packs).
     if has_idf and avg_len:
-        ln_idf = F.log(F.col("idf").cast("double"))
 
         def _pair_impact(x):
             tfd = x["tf"].cast("double")
@@ -412,10 +479,9 @@ def pack_blocks_jvm(
             )
             return tfd * F.lit(k1 + 1.0) / denom
 
-        best = F.array_max(F.transform("pairs", _pair_impact))
-        # when(>0) not when(<=0): a term missing from idf_df has null
-        # ln_idf, which must land in the 0.0 branch, not null the score
-        max_score = F.when(ln_idf > 0, ln_idf * best).otherwise(F.lit(0.0))
+        max_score = block_max_score(
+            F.array_max(F.transform("pairs", _pair_impact))
+        )
     else:
         max_score = F.lit(0.0)
     g = g.withColumn("max_score", max_score)
@@ -615,7 +681,7 @@ def _build_index_body(
     )
     keyed = exploded.select(
         F.xxhash64("term").alias("term_id"),
-        (F.col("doc_id") / F.lit(salt_range)).cast("int").alias("salt"),
+        salt_col(salt_range),
         "doc_id",
         "term",
         "doc_len",
@@ -715,6 +781,8 @@ def _build_index_body(
             r["salt"] for r in done.filter(F.col("phase") == "postings").collect()
         }
         rows = rows.filter(~F.col("salt").isin(list(done_salts)))
+    # a resumed build appends the missing salts' postings + lineage
+    mode = "append" if done_salts else "overwrite"
 
     build_avg_len = float(total_len) / max(int(doc_num), 1)
     # varint unroll bounds (see _varint_hex): deltas <= max doc id; tf
@@ -727,47 +795,14 @@ def _build_index_body(
         max_doc_bound=max_id,
         max_tf_bound=2 * max_dl_global + 2,
     )
-    # blocks (small, compressed) reshuffle to the salt layout for the
-    # write: over-partition the hash bins 4x (balls-in-bins), each salt
-    # lands in ONE partition — one directory per salt, ONE
-    # term_id-sorted file inside (parquet row-group min/max pruning;
-    # listing O(salts))
-    packed = packed.repartition(max(4 * n_salts, shuffle_parts), "salt")
-    writer = (
-        # the sort MUST lead with the partitionBy column: FileFormatWriter
-        # requires its output ordered by the partition columns and will
-        # otherwise insert its own SortExec(salt), whose external-sort
-        # spill merge interleaves equal-salt rows from different chunks —
-        # silently shredding the (term_id, block_seq) file order that the
-        # row-group term index depends on (observed: ~68 sorted runs per
-        # file, every per-group term_id range ~full-vocab, zero pruning)
-        packed.sortWithinPartitions("salt", "term_id", "block_seq")
-        .write.partitionBy("salt")
-        # bounded row groups over the term_id-sorted layout = a coarse
-        # term index in the parquet stats (see EngineConfig.pq_rowgroup_bytes)
-        .option("parquet.block.size", str(int(config.pq_rowgroup_bytes)))
+    # over-partition the salt hash bins 4x (balls-in-bins): each salt
+    # lands in ONE partition, so ONE term_id-sorted file per salt
+    write_postings(
+        packed, f"{out_dir}/postings", max(4 * n_salts, shuffle_parts),
+        config.pq_rowgroup_bytes, mode,
     )
-    if resume and done_salts:
-        writer.mode("append").parquet(f"{out_dir}/postings")
-    else:
-        writer.mode("overwrite").parquet(f"{out_dir}/postings")
     _mark("pack_write")
-    # range-partitioned + sorted by doc_id: the WAND rescore pushes
-    # candidate doc-id range predicates into this scan, and sorted row
-    # groups turn them into real parquet pruning (a pruned rescore
-    # touches a handful of candidate ranges, not the whole dictionary)
-    # file count scales with the corpus (~1M docs per file), not with
-    # the session's shuffle width: a 5k-doc build writes ONE sorted file
-    # via coalesce (no repartitionByRange sampling job), a 10^9-doc
-    # build still fans out to shuffle_parts/4 range files
-    dd_parts = max(1, min(shuffle_parts // 4, -(-int(doc_num) // 1_000_000)))
-    dd = (
-        doc_dict.coalesce(1) if dd_parts == 1
-        else doc_dict.repartitionByRange(dd_parts, "doc_id")
-    )
-    dd.sortWithinPartitions("doc_id").write.mode("overwrite").parquet(
-        f"{out_dir}/doc_dict"
-    )
+    write_doc_dict(doc_dict, f"{out_dir}/doc_dict", n_rows=doc_num)
     write_term_dict(
         term_dict, f"{out_dir}/term_dict",
         max(1, shuffle_parts // 8), config.pq_rowgroup_bytes,
@@ -776,33 +811,10 @@ def _build_index_body(
     dstats.unpersist()
     _mark("dict_writes")
 
-    # per-salt lineage from the WRITTEN blocks (metadata columns only —
-    # parquet column pruning never touches the payloads; no cache of the
-    # packed relation, which would not fit at 10^12 docs).  Explicit
-    # schema: a corpus whose every doc tokenizes to nothing writes ZERO
-    # posting files, and schema inference on the empty dir would fail
-    # the build (a legitimate crawl partition can be all-empty after
-    # text extraction)
-    written = spark.read.schema(
-        "term_id long, salt int, block_seq int, n int, "
-        "min_doc long, max_doc long"
-    ).parquet(f"{out_dir}/postings")
-    if resume and done_salts:
-        written = written.filter(~F.col("salt").isin(list(done_salts)))
-    lineage = written.groupBy("salt").agg(
-        F.sum("n").alias("rows_in"),
-        F.expr(
-            "bit_xor(xxhash64(term_id, block_seq, n, min_doc, max_doc))"
-        ).alias("checksum"),
+    write_lineage(
+        spark, f"{out_dir}/postings", manifest_path, "postings", mode,
+        where=~F.col("salt").isin(list(done_salts)) if done_salts else None,
     )
-    mrows = (
-        lineage.withColumn("phase", F.lit("postings"))
-        .withColumn("rows_out", F.col("rows_in"))
-        .withColumn("ts", F.current_timestamp())
-        .select("salt", "phase", "rows_in", "rows_out", "checksum", "ts")
-    )
-    mmode = "append" if (resume and done_salts) else "overwrite"
-    mrows.write.mode(mmode).parquet(manifest_path)
     _mark("lineage_manifest")
 
     meta = {

@@ -26,7 +26,6 @@ The merged index is query-identical to a fresh build of the union corpus
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -35,9 +34,14 @@ from pyspark.sql import functions as F
 
 from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig
 from tf_idf_vectorizer_spark.operators.index_build import (
+    live_salted_rows,
     pack_blocks_jvm,
+    write_doc_dict,
+    write_lineage,
+    write_postings,
     write_term_dict,
 )
+from tf_idf_vectorizer_spark.operators.stats import idf_table
 from tf_idf_vectorizer_spark.query.packed import PackedIndex
 
 
@@ -72,14 +76,6 @@ def merge_indexes(
 
     b_ids = b.doc_dict.select("doc_id")
 
-    def _live(idx: PackedIndex):
-        decoded = idx.decode_postings(None)
-        return decoded.join(
-            idx.doc_dict.select("doc_id", "gen", "doc_len"), ["doc_id", "gen"]
-        ).select("term_id", "doc_id", "tf", "doc_len")
-
-    rows = _live(a).join(b_ids, "doc_id", "left_anti").unionByName(_live(b))
-
     # merged doc universe (incl. zero-token docs from both sides)
     dd_a = a.doc_dict.join(b_ids, "doc_id", "left_anti")
     common = sorted(set(dd_a.columns) & set(b.doc_dict.columns))
@@ -93,6 +89,17 @@ def merge_indexes(
     ).first()
     doc_num, total_len = int(doc_num), int(total_len or 0)
     max_id = int(max_id) if max_id is not None else 0
+    n_salts = max(
+        int(config.n_salts), -(-(max_id + 1) // int(config.salt_target_rows))
+    )
+    salt_range = max(1, (max_id + n_salts) // n_salts)
+    # live rows of A minus B's ids, plus B's, salted for the pack; the
+    # (term_id, salt) clustering comes from the pack aggregation itself
+    rows = (
+        live_salted_rows(a, salt_range)
+        .join(b_ids, "doc_id", "left_anti")
+        .unionByName(live_salted_rows(b, salt_range))
+    )
 
     # stats re-derived from merged live rows: df = #docs per term (each
     # (term, doc) appears once); idf = N/(df+1) (tfidf.rs:32-40)
@@ -102,19 +109,15 @@ def merge_indexes(
         .distinct()
     )
     df_stats = rows.groupBy("term_id").agg(F.count("*").alias("df"))
-    dt = "float" if precision == "f32" else "double"
-    term_dict = df_stats.join(terms, "term_id").select(
-        "term_id",
-        "term",
-        "df",
-        (F.lit(float(doc_num)) / (F.col("df") + F.lit(1.0))).cast(dt).alias("idf"),
-    )
-    term_dict.cache()
+    term_dict = idf_table(
+        df_stats.join(terms, "term_id"), doc_num, precision
+    ).cache()
     n_terms, term_bytes = term_dict.agg(
         F.count("*"), F.sum(F.length("term"))
     ).first()
 
     if norms:
+        dt = "float" if precision == "f32" else "double"
         w = F.col("tf").cast(dt) * F.col("idf").cast(dt)
         new_norms = (
             rows.join(term_dict.select("term_id", "idf"), "term_id")
@@ -128,18 +131,6 @@ def merge_indexes(
             .withColumnRenamed("new_norm", "norm")
         )
 
-    n_salts = max(
-        int(config.n_salts), -(-(max_id + 1) // int(config.salt_target_rows))
-    )
-    salt_range = max(1, (max_id + n_salts) // n_salts)
-    # (term_id, salt) clustering comes from the pack aggregation itself
-    salted = rows.select(
-        "term_id",
-        (F.col("doc_id") / F.lit(salt_range)).cast("int").alias("salt"),
-        "doc_id",
-        F.col("tf").cast("int").alias("tf"),
-        F.col("doc_len").cast("int").alias("doc_len"),
-    )
     # no explicit repartition: the pack aggregation's own exchange puts
     # partial_collect_list below the shuffle (measured 1.7x faster than
     # a fine-grained explicit repartition on the compact path — see
@@ -150,45 +141,23 @@ def merge_indexes(
     # it max_score would be 0 and must not be trusted — see
     # meta["tight_bounds"])
     packed = pack_blocks_jvm(
-        salted, config.block_size, config.term_buckets, gen=0,
+        rows, config.block_size, config.term_buckets, gen=0,
         avg_len=build_avg_len, k1=config.k1, b=config.b,
         idf_df=term_dict.select("term_id", "idf"),
         max_doc_bound=max_id,
     )
-    # blocks (small, compressed) reshuffle to the salt layout
-    packed = packed.repartition(4 * n_salts, "salt")
-    # sort leads with salt so FileFormatWriter keeps this ordering
-    # instead of inserting its own order-shredding SortExec(salt)
-    # (see index_build.py pack_write)
-    packed.sortWithinPartitions(
-        "salt", "term_id", "block_seq"
-    ).write.partitionBy("salt").option(
-        "parquet.block.size", str(int(config.pq_rowgroup_bytes))
-    ).mode("overwrite").parquet(f"{out_dir}/postings")
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    doc_dict.coalesce(max(1, shuffle_parts // 4)).write.mode("overwrite").parquet(
-        f"{out_dir}/doc_dict"
+    write_postings(
+        packed, f"{out_dir}/postings", 4 * n_salts, config.pq_rowgroup_bytes
     )
+    write_doc_dict(doc_dict, f"{out_dir}/doc_dict")
     write_term_dict(
         term_dict, f"{out_dir}/term_dict",
-        max(1, shuffle_parts // 8), config.pq_rowgroup_bytes,
+        max(1, int(spark.conf.get("spark.sql.shuffle.partitions")) // 8),
+        config.pq_rowgroup_bytes,
     )
-
-    # per-salt lineage, metadata columns only (same shape as build_index)
-    written = spark.read.parquet(f"{out_dir}/postings")
-    lineage = written.groupBy("salt").agg(
-        F.sum("n").alias("rows_in"),
-        F.expr(
-            "bit_xor(xxhash64(term_id, block_seq, n, min_doc, max_doc))"
-        ).alias("checksum"),
-    )
-    (
-        lineage.withColumn("phase", F.lit("merge"))
-        .withColumn("rows_out", F.col("rows_in"))
-        .withColumn("ts", F.current_timestamp())
-        .select("salt", "phase", "rows_in", "rows_out", "checksum", "ts")
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/manifest")
+    write_lineage(
+        spark, f"{out_dir}/postings", f"{out_dir}/manifest", "merge",
+        "overwrite",
     )
     term_dict.unpersist()
 

@@ -34,9 +34,12 @@ def idf_table(df_stats: DataFrame, doc_num: int, precision: str = "f32") -> Data
 
     precision='f64' keeps idf in double — used by the cross-engine
     correctness gate where the oracle SQL must reproduce values exactly.
+    A ``term_id`` column passes through (build, batch and merge
+    dictionaries share this one formula).
     """
     dt = "float" if precision == "f32" else "double"
     return df_stats.select(
+        *(["term_id"] if "term_id" in df_stats.columns else []),
         "term",
         "df",
         (F.lit(float(doc_num)) / (F.col("df") + F.lit(1.0))).cast(dt).alias("idf"),

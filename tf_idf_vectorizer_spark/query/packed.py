@@ -242,8 +242,10 @@ def _decode_batch(pdf: pd.DataFrame):
     """Vectorized multi-block decode of one Arrow batch: varint streams
     are self-delimiting, so the concatenated payloads decode in ONE
     numpy pass; a segmented cumsum (the first value of every block is an
-    absolute doc id) restores ids with no per-block Python loop.
-    -> (n_per_block, doc_ids, tfs) arrays."""
+    absolute doc id) restores ids with no per-block Python loop.  The
+    running int64 cumsum may wrap modulo 2^64 on large ids; the
+    ``total - corr`` subtraction wraps back, so every id decodes exactly
+    (tested).  -> (n_per_block, doc_ids, tfs) arrays."""
     n = pdf["n"].to_numpy(np.int64)
     deltas = decode_varint(
         b"".join(bytes(x) for x in pdf["doc_deltas"])
@@ -254,6 +256,29 @@ def _decode_batch(pdf: pd.DataFrame):
     corr = np.zeros(len(n), dtype=np.int64)
     corr[1:] = total[starts[1:] - 1]
     return n, total - np.repeat(corr, n), tf
+
+
+def live_mask(ids_v, gens_v, docs, gens):
+    """Liveness of decoded posting rows against pinned doc stats (sorted
+    unique ``ids_v`` with their ``gens_v``): -> (ok, pos), where ``ok``
+    marks rows whose (doc_id, gen) matches a pinned row and ``pos[ok]``
+    indexes that row.  An empty pin keeps nothing."""
+    pos = np.minimum(np.searchsorted(ids_v, docs), max(ids_v.size - 1, 0))
+    if ids_v.size == 0:
+        return np.zeros(np.shape(docs), dtype=bool), pos
+    return (ids_v[pos] == docs) & (gens_v[pos] == gens), pos
+
+
+def unique_id_order(ids):
+    """argsort of doc ids for a liveness pin; raises ValueError naming a
+    repeated id (``live_mask`` assumes one doc_dict row per doc_id — it
+    would see only one row of a repeat and silently miscount)."""
+    order = np.argsort(ids, kind="stable")
+    s = ids[order]
+    dup = np.flatnonzero(s[1:] == s[:-1])
+    if dup.size:
+        raise ValueError(f"doc_dict has more than one row for doc_id {int(s[dup[0]])}")
+    return order
 
 
 def _decode_blocks_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -850,7 +875,8 @@ class PackedIndex:
 
     def _doc_stats_np(self):
         """Pinned (sorted doc_id, doc_len, gen) arrays, or None when the
-        corpus exceeds the driver bound."""
+        corpus exceeds the driver bound.  Raises ValueError when doc_dict
+        repeats a doc_id."""
         if not hasattr(self, "_dstats"):
             # the pin is ~24 bytes/doc of numpy arrays; the entry budget
             # (memory-derived) additionally protects small drivers
@@ -863,7 +889,7 @@ class PackedIndex:
                     self.doc_dict.select("doc_id", "doc_len", "gen")
                 )
                 ids = pdf["doc_id"].to_numpy(np.int64)
-                order = np.argsort(ids, kind="stable")
+                order = unique_id_order(ids)
                 self._dstats = (
                     ids[order],
                     pdf["doc_len"].to_numpy(np.float64)[order],
@@ -1157,9 +1183,7 @@ class PackedIndex:
         tf = tf_i.astype(np.float64)
         term = np.repeat(pdf["term_id"].to_numpy(np.int64), n)
         gen = np.repeat(pdf["gen"].to_numpy(np.int64), n)
-        pos = np.searchsorted(sids, dids)
-        pc = np.minimum(pos, sids.size - 1)
-        ok = (pos < sids.size) & (sids[pc] == dids) & (gens[pc] == gen)
+        ok, pc = live_mask(sids, gens, dids, gen)
         dids, term, tf, dl = dids[ok], term[ok], tf[ok], dls[pc[ok]]
         order = np.argsort(term, kind="stable")
         term_s = term[order]
@@ -2138,9 +2162,7 @@ class PackedIndex:
         ptid = np.repeat(pdf["term_id"].to_numpy(np.int64), n)
         pgen = np.repeat(pdf["gen"].to_numpy(np.int64), n)
         ptgt = np.repeat(pdf["is_target"].to_numpy(bool), n)
-        pos = np.searchsorted(sids, dids)
-        pc = np.minimum(pos, sids.size - 1)
-        ok = (pos < sids.size) & (sids[pc] == dids) & (gens[pc] == pgen)
+        ok, pc = live_mask(sids, gens, dids, pgen)
         dids, ptid, tf, ptgt = dids[ok], ptid[ok], tf[ok], ptgt[ok]
         dl = dls[pc[ok]]
         # canonical fold: bincount accumulates in row order, so sort the
@@ -2258,9 +2280,7 @@ class PackedIndex:
         if int(self.meta.get("generation", 0)) == 0:
             return None
         sids, _dls, dgens = self._doc_stats_np()
-        pos = np.searchsorted(sids, ids)
-        pc = np.minimum(pos, sids.size - 1)
-        return (pos < sids.size) & (sids[pc] == ids) & (dgens[pc] == gens)
+        return live_mask(sids, dgens, ids, gens)[0]
 
     def _sparse_query_terms(self, qinfo: list[dict]) -> list[int]:
         """Query terms whose whole postings are worth pulling to the

@@ -85,18 +85,27 @@ from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig, with_effective
 from tf_idf_vectorizer_spark.ioutil import recover_dir, write_json_atomic
 from tf_idf_vectorizer_spark.operators.index_build import (
     POSTINGS_FILE_SCHEMA,
+    block_max_score,
+    join_idf,
+    live_salted_rows,
     make_live_repacker,
     pack_blocks_jvm,
+    repack_schema,
+    salt_col,
+    write_doc_dict,
+    write_lineage,
+    write_postings,
     write_term_dict,
 )
+from tf_idf_vectorizer_spark.operators.stats import idf_table
 from tf_idf_vectorizer_spark.query.packed import (
     PackedIndex,
     _arrow_df,
     _decode_blocks_iter,
     blocks_overlapping_ids,
+    live_mask,
+    unique_id_order,
 )
-
-_DECODED = "term_id long, doc_id long, tf long, gen int"
 
 _TABLE_DIR_RE = re.compile(r"^(term_dict|doc_dict|postings)(_v\d+|_old|_new)?$")
 
@@ -116,32 +125,6 @@ def _orphan_local_path(uri: str) -> str:
         )
     local = uri[7:] if uri.startswith("file://") else uri
     return local.split("file:", 1)[-1] if local.startswith("file:") else local
-
-
-def _write_doc_dict(
-    spark: SparkSession, df: DataFrame, path: str, persist: bool = False
-) -> None:
-    """Full doc_dict rewrite in the FRESH-BUILD layout: range-partitioned
-    and sorted by doc_id, so the WAND rescore's candidate doc-range
-    predicates prune row groups (index_build.py writes it the same way —
-    a compacted or rewritten index must not silently lose that layout,
-    measured 2x+ on post-compact query latency when it did).
-
-    ``persist=True`` materializes ``df`` first: repartitionByRange's
-    range sampler is a full pass over the input, so a non-trivial
-    upstream (the mixed-batch anti-join + union) would otherwise be
-    computed twice.  Callers whose input is already cached (compact
-    reads PackedIndex.doc_dict, which is) skip it."""
-    parts = max(1, int(spark.conf.get("spark.sql.shuffle.partitions")) // 4)
-    if persist:
-        df = df.persist()
-    try:
-        df.repartitionByRange(parts, "doc_id").sortWithinPartitions(
-            "doc_id"
-        ).write.mode("overwrite").parquet(path)
-    finally:
-        if persist:
-            df.unpersist()
 
 
 class IncrementalIndex:
@@ -413,7 +396,7 @@ class IncrementalIndex:
                 # the shuffle at (vocab x partitions) rows, not one row
                 # per dead posting.
                 d_ids = np.array([r["doc_id"] for r in dying_rows], np.int64)
-                d_ord = np.argsort(d_ids, kind="stable")
+                d_ord = unique_id_order(d_ids)
                 d_ids = d_ids[d_ord]
                 d_gens = np.array(
                     [r["gen"] for r in dying_rows], np.int64
@@ -426,13 +409,9 @@ class IncrementalIndex:
 
                     ids_v, gens_v = bc_dying.value
                     for out in _decode_blocks_iter(batches):
-                        d = out["doc_id"].to_numpy()
-                        pos = np.searchsorted(ids_v, d)
-                        posc = np.minimum(pos, ids_v.size - 1)
-                        ok = (
-                            (pos < ids_v.size)
-                            & (ids_v[posc] == d)
-                            & (gens_v[posc] == out["gen"].to_numpy())
+                        ok, _ = live_mask(
+                            ids_v, gens_v, out["doc_id"].to_numpy(),
+                            out["gen"].to_numpy(),
                         )
                         if ok.any():
                             vc = out.loc[ok, "term_id"].value_counts()
@@ -474,9 +453,6 @@ class IncrementalIndex:
                 spark.conf.get("spark.sql.shuffle.partitions")
             )
             pack_parts = max(4 * n_salts, shuffle_parts)
-            salt_col = (
-                (F.col("doc_id") / F.lit(salt_range)).cast("int").alias("salt")
-            )
             if adds is not None:
                 # fused shape (same as build_index): ONE (term_id, salt)
                 # exchange feeds the TF aggregation and the pack, and
@@ -493,7 +469,7 @@ class IncrementalIndex:
                 )
                 keyed = exploded.select(
                     F.xxhash64("term").alias("term_id"),
-                    salt_col,
+                    salt_col(salt_range),
                     "doc_id",
                     "term",
                     "doc_len",
@@ -533,7 +509,7 @@ class IncrementalIndex:
                     tf0.join(new_doc_stats, "doc_id")
                     .select(
                         F.xxhash64("term").alias("term_id"),
-                        salt_col,
+                        salt_col(salt_range),
                         "doc_id",
                         "term",
                         "tf",
@@ -564,38 +540,18 @@ class IncrementalIndex:
                 max_doc_bound=int(max_new_id or 0),
                 max_tf_bound=2 * int(max_new_dl or 0) + 2,
             )
-            # blocks (small, compressed) reshuffle to the salt layout
-            packed = packed.repartition(pack_parts, "salt")
-            # leading salt keeps FileFormatWriter from re-sorting and
-            # shredding the term order (see index_build.py pack_write)
-            packed.sortWithinPartitions(
-                "salt", "term_id", "block_seq"
-            ).write.partitionBy("salt").option(
-                "parquet.block.size", str(int(self.config.pq_rowgroup_bytes))
-            ).mode("append").parquet(postings_path)
+            write_postings(
+                packed, postings_path, pack_parts,
+                self.config.pq_rowgroup_bytes, mode="append",
+            )
             spark.catalog.refreshByPath(postings_path)
             _mark("pack_write")
 
-            # per-batch lineage (north rule: per-partition lineage +
-            # metrics): one manifest row per salt touched by this
-            # generation's blocks, computed from the WRITTEN metadata
-            # columns only (payloads never read)
-            written = spark.read.schema(POSTINGS_FILE_SCHEMA).parquet(
-                postings_path
-            ).filter(F.col("gen") == gen)
-            lineage = written.groupBy("salt").agg(
-                F.sum("n").alias("rows_in"),
-                F.expr(
-                    "bit_xor(xxhash64(term_id, block_seq, n, min_doc, max_doc))"
-                ).alias("checksum"),
-            )
-            (
-                lineage.withColumn("phase", F.lit(f"batch_gen={gen}"))
-                .withColumn("rows_out", F.col("rows_in"))
-                .withColumn("ts", F.current_timestamp())
-                .select("salt", "phase", "rows_in", "rows_out", "checksum", "ts")
-                .write.mode("append")
-                .parquet(f"{self.dir}/manifest")
+            # per-batch lineage: one manifest row per salt touched by
+            # this generation's blocks
+            write_lineage(
+                spark, postings_path, f"{self.dir}/manifest",
+                f"batch_gen={gen}", "append", where=F.col("gen") == gen,
             )
             _mark("lineage")
 
@@ -663,16 +619,9 @@ class IncrementalIndex:
                     ).alias("df"),
                 )
             )
-        new_stats = new_stats.filter(F.col("df") > 0)
-        precision = meta.get("precision", "f32")
-        dt = "float" if precision == "f32" else "double"
-        new_term_dict = new_stats.select(
-            "term_id",
-            "term",
-            "df",
-            (F.lit(float(meta["doc_num"])) / (F.col("df") + F.lit(1.0)))
-            .cast(dt)
-            .alias("idf"),
+        new_term_dict = idf_table(
+            new_stats.filter(F.col("df") > 0), meta["doc_num"],
+            meta.get("precision", "f32"),
         )
 
         _mark("stats_rewrite_plan")
@@ -714,14 +663,13 @@ class IncrementalIndex:
                 spark.catalog.refreshByPath(dd_path)
         else:
             dd_name = f"doc_dict_v{ver}"
-            _write_doc_dict(
-                spark,
+            # not persisted first: the upstream (scan + broadcast
+            # anti-join + union) costs about one table scan — measured
+            # A/B at 2M docs, materializing it for the range sampler
+            # breaks even at best and doubles the table's disk footprint
+            write_doc_dict(
                 doc_dict.select("doc_id", "doc_len", "norm", "gen", *dd_extra),
                 f"{self.dir}/{dd_name}",
-                # persist=False: the upstream (scan + broadcast anti-join
-                # + union) costs about one table scan — measured A/B at
-                # 2M docs, materializing it first breaks even at best
-                # and doubles the table's disk footprint at scale
             )
             new_tables["doc_dict"] = dd_name
         # term_bytes feeds PackedIndex._can_pin_dict: recount it in the
@@ -799,63 +747,51 @@ class IncrementalIndex:
         ver = int(meta.get("table_version", 0)) + 1
         meta["table_version"] = ver
         dd_name = f"doc_dict_v{ver}"
-        _write_doc_dict(spark, new_dd, f"{self.dir}/{dd_name}")
+        write_doc_dict(new_dd, f"{self.dir}/{dd_name}")
         meta["norms"] = True
         self._commit(meta, {"doc_dict": dd_name})
         return meta
 
     # ------------------------------------------------------------------
     def compact(self) -> None:
-        """Reclaim stale posting rows: decode, keep (doc_id, gen) pairs
-        that match doc_dict, re-pack everything at generation 0.  No
-        term-dictionary collect: liveness alone decides survival (a term
-        whose df dropped to 0 simply has no live rows left)."""
+        """Reclaim stale posting rows: keep (doc_id, gen) pairs that match
+        doc_dict, re-pack everything at generation 0.  No term-dictionary
+        collect: liveness alone decides survival (a term whose df dropped
+        to 0 simply has no live rows left).
+
+        Two tiers, picked by whether the doc stats fit the driver pin
+        budget (PackedIndex._doc_stats_np — the serving tier's gate):
+
+        * pinned — the whole decode -> liveness -> re-sort -> re-encode
+          loop runs inside ONE mapInPandas over the COMPRESSED blocks,
+          with the doc stats broadcast (guide §8: the payload bytes cross
+          one exchange; decoded posting rows never shuffle).  Each block's
+          ``max_score`` is derived in the JVM from its best impact after a
+          broadcast idf join — the same expression as pack_blocks_jvm, so
+          the files are byte-identical (tests/test_compact_repack.py);
+        * distributed — the (doc_id, gen) liveness join + pack_blocks_jvm,
+          the scale path."""
         spark = self.spark
         meta = self._meta()
         idx = PackedIndex(spark, self.dir, self.config)
-        salt_range = meta["salt_range"]
-        n_salts = int(meta.get("n_salts", 8))
+        salt_range = int(meta["salt_range"])
         avg_len = float(meta.get("total_len", 0)) / max(
             int(meta.get("doc_num", 1)), 1
         )
         k1 = float(meta.get("k1", self.config.k1))
         b = float(meta.get("b", self.config.b))
-        # liveness: when the doc stats fit the driver pin budget
-        # (PackedIndex._doc_stats_np — the same gate the serving tier
-        # uses), the (doc_id -> gen, doc_len) check runs as a broadcast
-        # numpy filter INSIDE the decode pass: no (doc_id, gen) shuffle
-        # + sort of every decoded posting row for the sort-merge join.
-        # Past the budget, the distributed join is the scale path.
+        # idf_df: the re-pack recomputes the TRUE per-block max_score
+        # under current corpus stats, so the tight WAND bounds stay
+        # valid after compaction (generation returns to 0, which is
+        # exactly when _tight_bounds_ok trusts them — a 0.0 max_score
+        # here would zero every block bound and prune the whole index)
+        idf = idx.term_dict.select("term_id", "idf")
         ds = idx._doc_stats_np()
-        # fastest tier: when the TERM dictionary also fits its pin
-        # budget (_can_pin_dict — the serving tier's gate), the whole
-        # decode -> liveness -> re-sort -> re-encode loop runs inside
-        # ONE mapInPandas over the COMPRESSED blocks (guide §8: the
-        # payload bytes cross one exchange; the decoded posting rows
-        # never shuffle and the collect_list re-pack disappears).
-        # Output is bit-identical to the pack_blocks_jvm tiers below —
-        # pinned by tests/test_compact_repack.py — because the varint
-        # codec is canonical and the max_score arithmetic replicates
-        # the JVM expression op-for-op (ln(idf) values are collected
-        # from a JVM F.log projection, not recomputed in numpy).
-        if ds is not None and idx._can_pin_dict():
-            tdf = idx._topandas_arrow(
-                idx.term_dict.select(
-                    "term_id",
-                    F.log(F.col("idf").cast("double")).alias("ln_idf"),
-                )
-            )
-            t_ids = tdf["term_id"].to_numpy(np.int64)
-            t_ord = np.argsort(t_ids, kind="stable")
+        bc = None
+        if ds is not None:
             ids_s, dls_s, gens_s = ds
             bc = spark.sparkContext.broadcast(
-                (
-                    ids_s,
-                    dls_s.astype(np.int64),
-                    gens_s,
-                    t_ids[t_ord],
-                    tdf["ln_idf"].to_numpy(np.float64)[t_ord],
-                )
+                (ids_s, dls_s.astype(np.int64), gens_s)
             )
             # salt via min_doc (any block doc gives the block's salt):
             # an all-empty corpus has zero posting files, so the salt
@@ -869,144 +805,67 @@ class IncrementalIndex:
             par = int(spark.sparkContext.defaultParallelism)
             n_parts = max(
                 par,
-                min(
-                    -(-int(meta.get("total_len", 0)) // 150_000),
-                    64 * par,
-                ),
+                min(-(-int(meta.get("total_len", 0)) // 150_000), 64 * par),
             )
-            salt_key = (
-                F.col("min_doc") / F.lit(int(salt_range))
-            ).cast("int")
-            # declare the same nullability the JVM pack derives
-            # (posexplode pos / size() / lit are non-null), so the
-            # written files are BYTE-identical, footer included
-            from pyspark.sql.types import StructType
-
-            out_schema = StructType.fromDDL(POSTINGS_FILE_SCHEMA)
-            for f_ in out_schema.fields:
-                if f_.name in ("block_seq", "n", "gen"):
-                    f_.nullable = False
-            packed = blocks.repartition(
+            salt_key = (F.col("min_doc") / F.lit(salt_range)).cast("int")
+            repacked = blocks.repartition(
                 n_parts, F.col("term_id"), salt_key
             ).mapInPandas(
                 make_live_repacker(
-                    bc,
-                    self.config.block_size,
-                    int(meta["term_buckets"]),
-                    k1=k1,
-                    b=b,
-                    avg_len=avg_len,
-                    salt_range=int(salt_range),
+                    bc, self.config.block_size, int(meta["term_buckets"]),
+                    k1=k1, b=b, avg_len=avg_len, salt_range=salt_range,
                 ),
-                schema=out_schema,
+                schema=repack_schema(),
             )
-            try:
-                self._write_compacted(idx, meta, packed, n_salts)
-            finally:
-                bc.destroy()
-            return
-        bc = None
-        if ds is not None:
-            import pandas as _pd
-
-            ids_s, dls_s, gens_s = ds
-            bc = spark.sparkContext.broadcast(
-                (ids_s, dls_s.astype(np.int64), gens_s)
-            )
-
-            def _decode_live(batches):
-                ids_v, dls_v, gens_v = bc.value
-                for out in _decode_blocks_iter(batches):
-                    d = out["doc_id"].to_numpy()
-                    pos = np.searchsorted(ids_v, d)
-                    posc = np.minimum(pos, ids_v.size - 1)
-                    ok = (
-                        (pos < ids_v.size)
-                        & (ids_v[posc] == d)
-                        & (gens_v[posc] == out["gen"].to_numpy())
-                    )
-                    kept = out[ok]
-                    kept = kept.assign(doc_len=dls_v[posc[ok]])
-                    yield kept
-
-            live = (
-                idx._postings()
-                .select("term_id", "n", "doc_deltas", "tfs", "gen")
-                .mapInPandas(_decode_live, schema=_DECODED + ", doc_len long")
+            packed = join_idf(repacked, idf).select(
+                *[
+                    block_max_score(F.col(c)).alias("max_score")
+                    if c == "best" else c
+                    for c in repacked.columns
+                ]
             )
         else:
-            live = idx.decode_postings(None).join(
-                idx.doc_dict.select("doc_id", "gen", "doc_len"),
-                ["doc_id", "gen"],
+            # NO explicit repartition: the pack aggregation's own
+            # ENSURE_REQUIREMENTS exchange places partial_collect_list
+            # BELOW the shuffle (one stage with the liveness join) and
+            # AQE sizes the reduce side.  Measured A/B at 6.4M docs,
+            # fresh JVMs, interleaved: an explicit fine-grained
+            # repartition(total/150k) was 1.7x SLOWER (raw rows
+            # shuffled, both agg halves above the exchange, 10x the
+            # task count).  Delta unroll bound: one metadata-only agg
+            # over doc_dict (stored tf is int32, 5 bytes always cover it)
+            max_doc_id = idx.doc_dict.agg(F.max("doc_id")).first()[0]
+            packed = pack_blocks_jvm(
+                live_salted_rows(idx, salt_range), self.config.block_size,
+                meta["term_buckets"], gen=0, avg_len=avg_len, k1=k1, b=b,
+                idf_df=idf, max_doc_bound=int(max_doc_id or 0),
             )
-        rows = live.select(
-            "term_id",
-            (F.col("doc_id") / F.lit(salt_range)).cast("int").alias("salt"),
-            "doc_id",
-            F.col("tf").cast("int").alias("tf"),
-            F.col("doc_len").cast("int").alias("doc_len"),
-        )
-        # NO explicit repartition here: the pack aggregation's own
-        # ENSURE_REQUIREMENTS exchange places partial_collect_list
-        # BELOW the shuffle (one stage with the liveness join) and AQE
-        # sizes the reduce side.  Measured A/B at 6.4M docs, fresh
-        # JVMs, interleaved: an explicit fine-grained
-        # repartition(total/150k) was 1.7x SLOWER (raw rows shuffled,
-        # both agg halves above the exchange, 10x the task count).
-        # idf_df: the re-pack recomputes the TRUE per-block max_score
-        # under current corpus stats, so the tight WAND bounds stay
-        # valid after compaction (generation returns to 0, which is
-        # exactly when _tight_bounds_ok trusts them — a 0.0 max_score
-        # here would zero every block bound and prune the whole index)
-        # delta unroll bound: one metadata-only agg over doc_dict (tf
-        # needs no bound — stored tf is int32, 5 bytes always cover it)
-        max_doc_id = int(
-            idx.doc_dict.agg(F.max("doc_id")).first()[0] or 0
-        )
-        packed = pack_blocks_jvm(
-            rows, self.config.block_size, meta["term_buckets"], gen=0,
-            avg_len=avg_len, k1=k1, b=b,
-            idf_df=idx.term_dict.select("term_id", "idf"),
-            max_doc_bound=max_doc_id,
-        )
         try:
-            self._write_compacted(idx, meta, packed, n_salts)
+            self._write_compacted(idx, meta, packed)
         finally:
             if bc is not None:
                 bc.destroy()
 
     def _write_compacted(
-        self,
-        idx: PackedIndex,
-        meta: dict,
-        packed: DataFrame,
-        n_salts: int,
+        self, idx: PackedIndex, meta: dict, packed: DataFrame
     ) -> None:
-        """Shared compact tail: write the gen-0 re-pack + gen-reset
-        doc_dict to fresh versioned dirs and commit both atomically."""
+        """compact's tail (either tier): write the gen-0 re-pack +
+        gen-reset doc_dict to fresh versioned dirs and commit both
+        atomically."""
         # versioned commit covers postings too: the gen-0 re-pack and the
         # doc_dict gen reset MUST flip together (a crash between them
         # would otherwise leave a liveness join that matches nothing)
         ver = int(meta.get("table_version", 0)) + 1
         meta["table_version"] = ver
         p_name, dd_name = f"postings_v{ver}", f"doc_dict_v{ver}"
-        # blocks (small, compressed) reshuffle to the salt layout
-        packed = packed.repartition(4 * n_salts, "salt")
-        # leading salt keeps FileFormatWriter from re-sorting and
-        # shredding the term order (see index_build.py pack_write)
-        packed.sortWithinPartitions(
-            "salt", "term_id", "block_seq"
-        ).write.partitionBy("salt").option(
-            "parquet.block.size", str(int(self.config.pq_rowgroup_bytes))
-        ).mode("overwrite").parquet(
-            f"{self.dir}/{p_name}"
+        write_postings(
+            packed, f"{self.dir}/{p_name}", 4 * int(meta.get("n_salts", 8)),
+            self.config.pq_rowgroup_bytes,
         )
-        dd_cols = idx.doc_dict.columns
-        _write_doc_dict(
-            self.spark,
+        write_doc_dict(
             idx.doc_dict.select(
                 *[F.lit(0).alias("gen") if c == "gen" else F.col(c)
-                  for c in dd_cols]
+                  for c in idx.doc_dict.columns]
             ),
             f"{self.dir}/{dd_name}",
         )
